@@ -934,7 +934,8 @@ _STOP_SQL = {
 _SHINGLES_CTE = """
         toks AS (
             SELECT doc_id,
-                   regexp_split_to_array(trim(lower(text)), '\\s+') AS t
+                   regexp_split_to_array(trim(lower(text)),
+                                         '[ \\t\\n\\x0b\\f\\r]+') AS t
             FROM documents
         ),
         sh AS (
@@ -2126,7 +2127,9 @@ def _semdedup_oracle_sql(tau: float, n_cells: int, iters: int,
     arXiv:2303.09540): the shared Lloyd replay (_ivf_replay_ctes)
     gives the final cell assignment AND each vector's similarity to
     its own centroid (the rk=1 score); then within-cell all-pairs
-    exact cosine, admission at s > tau, and the keep-low-centroid
+    exact cosine (norm product floored at 1e-12, as in
+    vectors.make_pair_score_udf, so a zero vector scores 0, never
+    NaN), admission at s > tau, and the keep-low-centroid
     rule — per admitted pair the member with the larger
     (centroid_sim, id) struct loses; a vector keeps iff no pair names
     it loser.
@@ -2148,7 +2151,10 @@ def _semdedup_oracle_sql(tau: float, n_cells: int, iters: int,
             ), p AS (
                 SELECT x.vec_id AS pa, x.cs AS csa,
                        y.vec_id AS pb, y.cs AS csb,
-                       list_cosine_similarity(ex.v, ey.v) AS s,
+                       list_dot_product(ex.v, ey.v) / greatest(
+                           sqrt(list_dot_product(ex.v, ex.v))
+                           * sqrt(list_dot_product(ey.v, ey.v)), 1e-12)
+                           AS s,
                        ex.v = ey.v AS same_vec
                 FROM csim x JOIN csim y
                   ON x.cell = y.cell AND x.vec_id < y.vec_id

@@ -12,7 +12,7 @@ partitioning.
 
 from __future__ import annotations
 
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 @dataclass(frozen=True)
@@ -28,9 +28,7 @@ class DedupConfig:
     num_probes: int = 2            # extra leave-one-row-out probe keys per band
     # --- verification (maps exact re-rank, basis.h:186-202)
     tau: float = 0.8               # exact word-shingle Jaccard threshold
-    prefilter_margin: float = 0.25 # signature_estimate margin (estimate-only passes)
-    # --- SimHash (secondary fingerprint)
-    simhash_bits: int = 64
+    # --- SimHash (secondary fingerprint; the kernel is fixed at 64 bits)
     hamming_max: int = 3
     # --- substring pass (winnowing)
     min_substring_len: int = 200   # chars; guarantee t = window + kgram - 1
@@ -40,9 +38,6 @@ class DedupConfig:
     salt_subgroup: int = 8         # expected subgroup size inside salted buckets
     # --- determinism
     seed: int = 42
-
-    # --- runtime tuning surface (not part of the recall-parity config)
-    shuffle_partitions: int = field(default=32, compare=False)
 
     def __post_init__(self) -> None:
         if self.bands * self.rows_per_band != self.num_hashes:
@@ -72,15 +67,16 @@ class DedupConfig:
     # keys moved from JVM xxhash64 to the UDF's splitmix fold.
     # v3: substring kernels (winnowing fingerprints + LCS) moved from
     # UTF-8 byte units to Unicode code points — non-ASCII corpora hash
-    # differently. NB: the incremental store FAILS LOUDLY on a version
-    # mismatch instead of silently restarting state
-    # (streaming/incremental.py, ADVICE r2).
-    SCHEMA_VERSION = 3
+    # differently. v4: signatures dropped the unread `minhash` column
+    # and the incremental store no longer keeps a `buckets` table.
+    # NB: the incremental store FAILS LOUDLY on a version mismatch
+    # instead of silently restarting state (streaming/incremental.py,
+    # ADVICE r2).
+    SCHEMA_VERSION = 4
 
     def config_id(self) -> str:
         """Stable identity string stored beside every checkpoint."""
-        items = sorted((k, v) for k, v in self.to_dict().items()
-                       if k != "shuffle_partitions")
+        items = sorted(self.to_dict().items())
         return f"v{self.SCHEMA_VERSION}|" + \
             "|".join(f"{k}={v}" for k, v in items)
 

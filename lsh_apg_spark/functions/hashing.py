@@ -1,51 +1,13 @@
-"""JVM-side column expressions: LSH band hashes, multi-probe keys,
-canonical pair keys, signature-agreement estimate, SimHash Hamming.
+"""JVM-side column expressions: canonical pair keys, the md5-frozen
+SimHash, SimHash Hamming.
 
-Everything here stays inside whole-stage codegen (xxhash64, zip_with,
-aggregate, bit ops) — no Python in the banding/prefilter path."""
+Everything here stays inside whole-stage codegen (higher-order
+functions, bit ops) — no Python UDFs."""
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from lsh_apg_spark.config import DedupConfig
-
-
-def band_probe_hashes(cfg: DedupConfig, minhash_col: str = "minhash") -> Column:
-    """Array of 64-bit bucket keys (bands x (1 + num_probes)) for one
-    signature. The band index and probe index are MIXED INTO the hash
-    (xxhash64 seed/prefix), so a single BIGINT is the whole bucket key —
-    no separate (band, probe) columns ride the explode, which keeps the
-    widest shuffle of the pipeline at 16 bytes/row (cross-band hash
-    collisions are 2^-64 events, and a collision only ever ADDS a
-    candidate pair that exact verification then judges).
-
-    Key 0 of each band hashes all ``rows_per_band`` MinHash values
-    (classic banding — reference's K-value concatenated key,
-    src/e2lsh.cpp:14-23). Probes 1..num_probes re-hash the band with row
-    (p-1) *left out*: two documents whose band agrees on the remaining
-    rows_per_band-1 values collide on that probe even though their full
-    band differs — the APG-style multi-probe recall booster (reinterprets
-    LLCP-ordered neighbor probing, src/e2lsh.cpp:573-699) expressed as a
-    deterministic explode instead of a sorted in-memory scan.
-    """
-    r = cfg.rows_per_band
-    hashes = []
-    for band in range(cfg.bands):
-        # hash the SLICED array, not r unpacked element_at columns: the
-        # wide-expression form is ~14x slower end-to-end (expression
-        # blow-up under the explode generator); xxhash64 hashes array
-        # contents recursively, so a 2-arg slice form is equivalent
-        base = F.slice(minhash_col, band * r + 1, r)
-        hashes.append(F.xxhash64(F.lit(band), base))
-        for p in range(1, cfg.num_probes + 1):
-            kept = F.concat(
-                F.slice(minhash_col, band * r + 1, p - 1),
-                F.slice(minhash_col, band * r + p + 1, r - p),
-            )
-            hashes.append(F.xxhash64(F.lit(band), F.lit(-p), kept))
-    return F.array(*hashes)
 
 
 def canonical_pair(a: Column | str, b: Column | str) -> tuple[Column, Column]:
@@ -54,21 +16,6 @@ def canonical_pair(a: Column | str, b: Column | str) -> tuple[Column, Column]:
     has exactly one row, whatever order the join produced it in."""
     a, b = F.col(a) if isinstance(a, str) else a, F.col(b) if isinstance(b, str) else b
     return F.least(a, b), F.greatest(a, b)
-
-
-def signature_agreement(mh_a: Column | str, mh_b: Column | str) -> Column:
-    """Fraction of agreeing MinHash positions — an unbiased estimate of
-    Jaccard; the cheap filter run before the exact verify UDF (maps the
-    reference's low-dim hash-distance prune, src/divGraph.h:544,1118).
-    Pure JVM: zip_with + aggregate, no Python."""
-    mh_a = F.col(mh_a) if isinstance(mh_a, str) else mh_a
-    mh_b = F.col(mh_b) if isinstance(mh_b, str) else mh_b
-    agree = F.aggregate(
-        F.zip_with(mh_a, mh_b, lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    return agree.cast("double") / F.size(mh_a).cast("double")
 
 
 _HEX_ALPHABET = "0123456789abcdef"

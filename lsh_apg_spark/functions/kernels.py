@@ -93,9 +93,12 @@ def shingle_hashes_arrow_batch(texts, k: int,
     dictionary_encode); Python touches each UNIQUE token once (blake2b
     through the shared memo cache) instead of probing a dict per token
     occurrence. The rolling combine then runs PER DOC over cache-sized
-    slices — deliberately NOT over one concatenated array, which is the
-    big-allocation pattern that stalled the numpy batch form on this
-    host (see shingle_hashes_batch STATUS).
+    slices — deliberately NOT over one concatenated array: a fully
+    concatenated numpy batch form (one rolling combine over the whole
+    batch + lexsort dedup) was measured 2-7x SLOWER than the per-doc
+    kernel on a 4-vCPU VM, its ~20 MB temporaries stalling on page
+    faults, and segmented reduceat folds lost to the per-doc kernel's
+    L1-resident arrays as well.
 
     Parity gate: Python str.lower() and Arrow differ on a few NON-ASCII
     code points (dotted capital İ, Greek final sigma — measured), so
@@ -148,108 +151,6 @@ def shingle_hashes_arrow_batch(texts, k: int,
     return out
 
 
-def shingle_hashes_batch(texts, k: int) -> list[np.ndarray]:
-    """Batch form of shingle_hashes over a whole Arrow batch — output
-    is ELEMENT-IDENTICAL per document (same token hashes, same rolling
-    combine, same sorted-distinct order), but the per-token Python work
-    drops from one dict probe + scalar store per TOKEN OCCURRENCE to
-    one blake2b per UNIQUE token per batch:
-
-    * all tokens of the batch factorize in C (pandas.factorize), and
-      occurrence hashes come from one vectorized gather;
-    * rolling shingle hashes compute in k shifted-add passes over the
-      single CONCATENATED hash array; windows that straddle a document
-      boundary are masked out vectorized (doc index of window start !=
-      doc index of window end);
-    * per-document sorted-distinct falls out of one lexsort over
-      (doc, hash) + an adjacent-difference mask — the batched np.unique.
-
-    STATUS — measured, NOT shipped (the A/B-verify pattern of
-    BASELINE.md): on this sandbox VM the batch form runs 2-7x SLOWER
-    than the per-doc kernel on fixture text despite doing strictly
-    less Python work, because the VM's large-array allocations stall
-    on page faults (fresh ~20 MB numpy temporaries measured at erratic
-    10-100x op slowdowns; with preallocated outputs the same ufuncs
-    run at full speed, so it is allocation, not compute). The per-doc
-    kernel's KB-sized arrays never leave the CPU cache or the small-
-    object allocator. Kept parity-tested
-    (tests/test_kernels.py::test_shingle_hashes_batch_matches_per_doc)
-    for hosts with sane huge-page behavior; re-measure before wiring
-    into make_signature_udf.
-
-    The CHUNKED middle ground (16-64 docs per concatenated segment +
-    np.minimum.reduceat/np.add.reduceat segmented folds, temporaries
-    capped at a few MB) was also measured (r4): minhash 0.44 -> 0.35 s
-    /4k docs at chunk=32 (~20%, within window noise), chunked simhash
-    3-5x SLOWER than per-doc, per-doc dict-memo token lookup FASTER
-    than per-doc pd.factorize (0.17 vs 0.39 s — the cross-doc memo hit
-    rate beats C factorization on web text's repeated vocabulary). No
-    variant moves the signature stage materially on this host; the
-    remaining headroom is a compiled tokenizer, out of scope here.
-
-    r5 re-confirmation at full batch width: one-segment-per-doc
-    reduceat minhash+simhash over 10k concatenated fixture docs
-    measured 0.28x per-doc (5.1 s vs 1.4 s, min-of-5, exact parity) —
-    reduceat's per-segment scalar loop plus the 256 MB bit-unpack
-    temporary lose to the per-doc kernel's L1-resident outer products.
-    The shipped hot path is therefore Arrow tokenization (see
-    shingle_hashes_arrow_batch) + per-doc numpy folds."""
-    import pandas as pd
-
-    tok_lists = [normalize_tokens(t or "") for t in texts]
-    lens = np.array([len(t) for t in tok_lists], dtype=np.int64)
-    ndocs = len(tok_lists)
-    res: list = [None] * ndocs
-
-    all_toks = [t for toks in tok_lists for t in toks]
-    if all_toks:
-        codes, uniques = pd.factorize(np.asarray(all_toks, dtype=object))
-        uniq_hashes = np.fromiter(
-            (token_hash(u) for u in uniques), dtype=U64, count=len(uniques))
-        th_all = uniq_hashes[codes]
-    else:
-        th_all = np.empty(0, dtype=U64)
-
-    total = int(lens.sum())
-    doc_idx = np.repeat(np.arange(ndocs, dtype=np.int64), lens)
-    starts = np.zeros(ndocs + 1, dtype=np.int64)
-    np.cumsum(lens, out=starts[1:])
-
-    m_total = total - k + 1
-    if m_total > 0:
-        with np.errstate(over="ignore"):
-            s = np.zeros(m_total, dtype=U64)
-            for j in range(k):
-                s = s * _SHINGLE_MULT + th_all[j:j + m_total]
-        valid = doc_idx[:m_total] == doc_idx[k - 1:]
-        d = doc_idx[:m_total][valid]
-        h = s[valid]
-        order = np.lexsort((h, d))
-        d_s, h_s = d[order], h[order]
-        first = np.ones(len(d_s), dtype=bool)
-        first[1:] = (d_s[1:] != d_s[:-1]) | (h_s[1:] != h_s[:-1])
-        du, hu = d_s[first], h_s[first]
-        cut = np.searchsorted(du, np.arange(ndocs + 1))
-        for i in range(ndocs):
-            if lens[i] >= k:
-                res[i] = hu[cut[i]:cut[i + 1]]
-
-    for i in range(ndocs):
-        if res[i] is not None:
-            continue
-        n = int(lens[i])
-        if n == 0:
-            res[i] = np.array([_EMPTY_TOKEN_HASH], dtype=U64)
-            continue
-        th = th_all[starts[i]:starts[i] + n]
-        with np.errstate(over="ignore"):
-            acc = np.zeros(1, dtype=U64)
-            for j in range(n):
-                acc = acc * _SHINGLE_MULT + th[j]
-        res[i] = acc
-    return res
-
-
 def minhash_params(num_hashes: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     """Seeded (a, b) multiply-shift params: a odd uint64, b uint64.
     Analogue of the reference's HashParam rndAs/rndBs
@@ -290,18 +191,19 @@ def band_probe_keys(minhash: np.ndarray, bands: int, rows_per_band: int,
     bands*(1+num_probes)) int64 bucket keys, vectorized across the
     whole Arrow batch.
 
-    Semantics are identical to the JVM band_probe_hashes
-    (functions/hashing.py): key 0 of each band folds all rows_per_band
-    MinHash values (two docs collide iff the band agrees), probes
-    1..num_probes fold the band with row (p-1) left out (the
-    leave-one-out multi-probe). The FOLD function differs (splitmix
-    avalanche vs xxhash64) but any deterministic hash of the same
-    values yields the same collision structure, so the emitted pair
-    set is unchanged (modulo 2^-64 hash collisions). Moved into numpy
-    because the JVM expression form (48 slice/concat allocations per
-    row under an explode generator) measured ~6s per 100k docs and did
-    not scale with cores; this is ~1000x fewer Python-side ops than
-    per-doc hashing and costs ~ms per batch."""
+    Key 0 of each band folds all rows_per_band MinHash values (two
+    docs collide iff the band agrees — the reference's K-value
+    concatenated key, src/e2lsh.cpp:14-23); probes 1..num_probes fold
+    the band with row (p-1) left out, so two docs whose band agrees on
+    the remaining rows collide on that probe (the leave-one-out
+    multi-probe). Band and probe indices are mixed into the fold's
+    seed, so one BIGINT is the whole bucket key; a cross-band
+    collision is a 2^-64 event that only ever ADDS a candidate pair
+    for exact verification to judge. Runs inside the signature UDF
+    because the earlier JVM expression form (48 slice/concat
+    allocations per row under an explode generator) measured ~6s per
+    100k docs and did not scale with cores; this costs ~ms per
+    batch."""
     mh = minhash.view(U64)
     n = mh.shape[0]
     r = rows_per_band

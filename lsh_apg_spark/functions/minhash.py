@@ -13,14 +13,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType, DoubleType, LongType, StructField, StructType,
+    ArrayType, LongType, StructField, StructType,
 )
 
 from lsh_apg_spark.config import DedupConfig
 from lsh_apg_spark.functions import kernels
 
 _SIGNATURE_SCHEMA = StructType([
-    StructField("minhash", ArrayType(LongType(), False), False),
     StructField("simhash", LongType(), False),
     StructField("shingles", ArrayType(LongType(), False), False),
     StructField("bhashes", ArrayType(LongType(), False), False),
@@ -28,8 +27,8 @@ _SIGNATURE_SCHEMA = StructType([
 
 
 def make_signature_udf(cfg: DedupConfig):
-    """(text) -> struct<minhash: array<bigint>, simhash: bigint,
-    shingles: array<bigint>, bhashes: array<bigint>>.
+    """(text) -> struct<simhash: bigint, shingles: array<bigint>,
+    bhashes: array<bigint>>.
 
     ``shingles`` is the sorted distinct shingle-hash set itself — stored
     so exact-Jaccard verification is a pure JVM array_intersect over the
@@ -41,6 +40,8 @@ def make_signature_udf(cfg: DedupConfig):
     batch's minhash matrix) whereas the JVM expression form under the
     bucket explode measured ~6 s per 100k docs and did not scale with
     cores — the banding stage downstream is then a bare explode.
+    The MinHash matrix itself exists only inside this pass: nothing
+    downstream reads it, so it never crosses the Arrow boundary.
 
     Iterator form so the (a, b) MinHash params are materialized once per
     executor task, not per batch — the Spark analogue of broadcasting
@@ -67,9 +68,8 @@ def make_signature_udf(cfg: DedupConfig):
             # Arrow ser/de included) measured 7.59 -> 6.20 s = 1.22x
             # at 100k docs / local[4], min-of-3 — short of the 1.5x
             # VERDICT aspiration, but strictly faster at exact parity,
-            # so shipped. The fully
-            # concatenated numpy batch form stays unshipped: its large
-            # temporaries stall this VM (see kernels.py STATUS note).
+            # so shipped. A fully concatenated numpy batch form was
+            # measured slower still (see shingle_hashes_arrow_batch).
             cache: dict[str, np.uint64] = {}
             shingle_lists = kernels.shingle_hashes_arrow_batch(
                 list(texts), k, cache)
@@ -82,39 +82,11 @@ def make_signature_udf(cfg: DedupConfig):
                 shingle_sets.append(sh.view(np.int64))
             bkeys = kernels.band_probe_keys(
                 minhashes, bands, rows_per_band, num_probes)
-            yield pd.DataFrame({"minhash": list(minhashes),
-                                "simhash": simhashes,
+            yield pd.DataFrame({"simhash": simhashes,
                                 "shingles": shingle_sets,
                                 "bhashes": list(bkeys)})
 
     return signature_udf
-
-
-def make_jaccard_udf(cfg: DedupConfig):
-    """(text_a, text_b) -> double exact word-shingle Jaccard.
-
-    NOT the shipped verify path — kept as variant C of the verify
-    payload A/B (scripts/ab_verify.py). Measured at 400k docs /
-    local[16] (530k candidate pairs): recomputing shingles per pair
-    from text is 2.0x SLOWER (15.5s vs 7.7s) than the shipped JVM
-    array_intersect over materialized shingle sets, because text rows
-    are as wide as shingle-set rows AND the kernel re-pays
-    tokenize+hash per pair in Python. The bottom-k sketch variant (B)
-    saved only 16% while mis-deciding ~1.1% of edges at the tau
-    boundary — unacceptable against the exact-oracle correctness gate.
-    Decision recorded in BASELINE.md."""
-    k = cfg.shingle_size
-
-    @F.pandas_udf(DoubleType())
-    def jaccard_udf(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        for text_a, text_b in it:
-            cache: dict[str, np.uint64] = {}
-            out = np.empty(len(text_a), dtype=np.float64)
-            for i, (ta, tb) in enumerate(zip(text_a, text_b)):
-                out[i] = kernels.exact_jaccard(ta or "", tb or "", k, cache)
-            yield pd.Series(out)
-
-    return jaccard_udf
 
 
 def make_winnow_udf(cfg: DedupConfig):

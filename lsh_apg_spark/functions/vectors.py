@@ -66,11 +66,14 @@ def cosine(a: Column | str, b: Column | str) -> Column:
 def make_pair_score_udf(metric: str = "cosine"):
     """(vec_a, vec_b) -> double, one numpy pass per Arrow batch.
 
-    cosine: dot / (|a|*|b|); l2_sq: squared L2 (squared space end-to-
-    end like USE_SQRDIST, src/def.h:3); l1 / linf: Manhattan and
-    Chebyshev (maps fvec_L1_avx512 / fvec_Linf_avx512,
-    src/distances_simd_avx512.h:29-40 — one numpy reduction per Arrow
-    batch is the Spark analogue of those SIMD loops). float64
+    cosine: dot / max(|a|*|b|, 1e-12) — the floor (as in the IVF
+    assignment UDFs) scores a zero vector 0 instead of NaN, which the
+    engines would order differently against tau; l2_sq: squared L2
+    (squared space end-to-end like USE_SQRDIST, src/def.h:3); l1 /
+    linf: Manhattan and Chebyshev (maps fvec_L1_avx512 /
+    fvec_Linf_avx512, src/distances_simd_avx512.h:29-40 — one numpy
+    reduction per Arrow batch is the Spark analogue of those SIMD
+    loops). float64
     accumulation so results agree with any double-precision oracle to
     well past 4 decimals."""
 
@@ -82,7 +85,7 @@ def make_pair_score_udf(metric: str = "cosine"):
             if metric == "cosine":
                 num = np.einsum("ij,ij->i", a, b)
                 den = np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1)
-                out = num / den
+                out = num / np.maximum(den, 1e-12)
             elif metric == "l2_sq":
                 d = a - b
                 out = np.einsum("ij,ij->i", d, d)

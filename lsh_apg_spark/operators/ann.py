@@ -163,7 +163,7 @@ def _bucket_rows(
     adaptive probe budget (lsh_topk) splits on it.
 
     Band + probe indices are mixed INTO the 64-bit hash (same trick as
-    the dedup path, functions/hashing.band_probe_hashes) so a bucket
+    the dedup path, functions/kernels.band_probe_keys) so a bucket
     row is 16 bytes — vectors never ride the band explode. Probes
     1..num_probes re-hash the band with hash value (p-1) left out: two
     vectors whose band differs in exactly that value still collide —

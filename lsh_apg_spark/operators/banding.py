@@ -5,9 +5,8 @@ src/e2lsh.cpp:573-699).
 
 The "hash table" IS the shuffle: downstream groupBy/join on
 (band, probe, bhash) is Spark's distributed equivalent of the
-reference's in-memory multimaps. Band hashes are computed JVM-side
-(xxhash64 inside whole-stage codegen) — the pandas UDF boundary ends at
-the signature stage."""
+reference's in-memory multimaps. Band hashes are computed inside the
+signature UDF (kernels.band_probe_keys), so this stage is pure JVM."""
 
 from __future__ import annotations
 
@@ -15,28 +14,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lsh_apg_spark.config import DedupConfig
-from lsh_apg_spark.functions.hashing import band_probe_hashes
 
 
 def explode_buckets(signatures: DataFrame, cfg: DedupConfig,
                     id_col: str = "url") -> DataFrame:
-    """(id, minhash, ...) -> (id, bhash BIGINT).
+    """(id, bhashes, ...) -> (id, bhash BIGINT).
 
     The band/probe indices live INSIDE the hash (see
-    band_probe_hashes / kernels.band_probe_keys), so a bucket row is
-    just (id, key) — 16 bytes with compact ids. Row count =
-    N * bands * (1 + num_probes); the explode factor is the
-    multi-probe recall knob (reference's lshUB probe budget,
-    src/divGraph.h:934-937).
+    kernels.band_probe_keys), so a bucket row is just (id, key) — 16
+    bytes with compact ids. Row count = N * bands * (1 + num_probes);
+    the explode factor is the multi-probe recall knob (reference's
+    lshUB probe budget, src/divGraph.h:934-937).
 
-    When the signatures carry a precomputed ``bhashes`` column (the
-    standard pipeline path) this is a bare explode — zero per-row hash
-    work. The JVM expression fallback exists for minhash-only frames
-    (its 48 slice/concat allocations per row measured ~6 s/100k docs
-    and did not scale with cores, which is why the keys moved into the
-    signature UDF's numpy pass)."""
-    if "bhashes" in signatures.columns:
-        return signatures.select(
-            id_col, F.explode("bhashes").alias("bhash"))
-    return signatures.select(
-        id_col, F.explode(band_probe_hashes(cfg)).alias("bhash"))
+    The keys were computed in the signature UDF's numpy pass, so this
+    is a bare explode with zero per-row hash work. ``cfg`` is unused;
+    it keeps the (frame, cfg, id_col) shape every stage operator has."""
+    return signatures.select(id_col, F.explode("bhashes").alias("bhash"))

@@ -39,7 +39,9 @@ def shingle_rows(docs: DataFrame, k: int, id_col: str = "doc_id",
     with JVM higher-order functions (split/transform/explode). The
     SQL-portable twin of the hashed-shingle kernel: used by the
     brute-force oracle so DuckDB can replay it exactly."""
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    # the whitespace class is spelled out: Java's \s includes \x0b but
+    # RE2's (the DuckDB twin) does not
+    toks = F.split(F.trim(F.lower(F.col(text_col))), r"[ \t\n\x0b\f\r]+")
     idx = F.sequence(F.lit(0), F.size(toks) - k)
     sh = F.transform(idx, lambda i: F.concat_ws(
         " ", *[F.element_at(toks, i + j + 1) for j in range(k)]))
@@ -108,7 +110,7 @@ def simhash_neardup_pairs(signatures: DataFrame, cfg: DedupConfig,
     verify — the same candidates-then-verify shape as the main
     pipeline, on the SimHash fingerprint."""
     n_blocks = 4
-    block_bits = cfg.simhash_bits // n_blocks
+    block_bits = 64 // n_blocks
     mask = (1 << block_bits) - 1
     blocks = F.array(*[
         F.struct(

@@ -56,6 +56,7 @@ def pack_sequences(docs: DataFrame, budget: int,
     because shard order is (md5, id), not arrival order."""
     if budget < 1:
         raise ValueError(f"budget must be >= 1, got {budget}")
+    id_type = docs.schema[id_col].dataType.simpleString()
     h = F.md5(F.concat(F.lit("pack:"), F.col(id_col).cast("string")))
     base = docs.select(
         F.col(id_col).alias("id"),
@@ -83,7 +84,8 @@ def pack_sequences(docs: DataFrame, budget: int,
 
     return (
         base.groupBy("shard")
-        .applyInPandas(_pack, "id long, shard int, seq int, n_tokens int")
+        .applyInPandas(
+            _pack, f"id {id_type}, shard int, seq int, n_tokens int")
         .select(F.col("id").alias(id_col), "shard", "seq", "n_tokens")
     )
 

@@ -162,18 +162,3 @@ def bucket_stats_from_groups(groups: DataFrame, cfg: DedupConfig,
         F.coalesce("salted_buckets", F.lit(0)).alias("salted_buckets"),
         F.coalesce("salted_rows", F.lit(0)).alias("salted_rows"),
     )
-
-
-def bucket_stats(buckets: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Standalone skew stats over raw bucket rows (full aggregation —
-    prefer bucket_stats_from_groups when bucket_arrays is already
-    materialized)."""
-    sizes = buckets.groupBy(*BUCKET_KEY).agg(F.count(F.lit(1)).alias("n"))
-    return sizes.agg(
-        F.count(F.lit(1)).alias("num_buckets"),
-        F.max("n").alias("max_bucket"),
-        F.avg("n").alias("avg_bucket"),
-        F.sum((F.col("n") > cfg.bucket_cap).cast("long")).alias("salted_buckets"),
-        F.sum(F.when(F.col("n") > cfg.bucket_cap, F.col("n")).otherwise(0))
-         .alias("salted_rows"),
-    )

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lsh_apg_spark.config import DedupConfig
-from lsh_apg_spark.functions.hashing import signature_agreement, simhash_hamming
+from lsh_apg_spark.functions.hashing import simhash_hamming
 
 
 def verify_edges(pairs: DataFrame, signatures: DataFrame, cfg: DedupConfig,
@@ -49,30 +49,4 @@ def verify_edges(pairs: DataFrame, signatures: DataFrame, cfg: DedupConfig,
         .filter(F.col("jaccard") >= cfg.tau)
         .withColumn("hamming", simhash_hamming("_ha", "_hb"))
         .select("a", "b", "jaccard", "hamming")
-    )
-
-
-def signature_estimate(pairs: DataFrame, signatures: DataFrame,
-                       cfg: DedupConfig, id_col: str = "url") -> DataFrame:
-    """(a, b) -> (a, b, sig_est, hamming): the CHEAP MinHash-agreement
-    estimate + SimHash Hamming, without exact verification. Kept as a
-    standalone operator for pipelines that want an estimate-only pass
-    (e.g. pre-ranking at interactive latency); the dedup pipeline
-    itself goes straight to exact verification since both are JVM-side
-    and the exact check reads the same joined rows."""
-    sig_a = signatures.select(
-        F.col(id_col).alias("a"),
-        F.col("minhash").alias("_ma"),
-        F.col("simhash").alias("_ha"),
-    )
-    sig_b = signatures.select(
-        F.col(id_col).alias("b"),
-        F.col("minhash").alias("_mb"),
-        F.col("simhash").alias("_hb"),
-    )
-    return (
-        pairs.join(sig_a, "a").join(sig_b, "b")
-        .withColumn("sig_est", signature_agreement("_ma", "_mb"))
-        .withColumn("hamming", simhash_hamming("_ha", "_hb"))
-        .select("a", "b", "sig_est", "hamming")
     )

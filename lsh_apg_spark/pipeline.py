@@ -2,8 +2,11 @@
 reference's main build+query program, src/main.cpp:11-230, recast as
 the staged dataflow of SURVEY.md §3.4):
 
-  pages ─► signatures ─► buckets ─► pairs ─► edges ─► clusters
-                                 └► substring edges (winnowing) ──┘
+  pages ─► signatures ─► bucket_groups ─► pairs ─► edges ─► clusters
+      └► substring edges (winnowing) ─────────────────────┘
+
+(the bucket rows between signatures and bucket_groups are a lazy
+explode of the signatures' `bhashes`, never stored)
 
 Every stage optionally checkpoints through CheckpointStore (resume =
 the reference's cache-or-build ben_create / index save-load) and logs
@@ -133,16 +136,14 @@ def run_dedup(
 
     signatures = stage("signatures", lambda: compute_signatures(
         docs, cfg, id_col="nid", text_col=text_col))
-    # the bucket explode is cheap JVM work over the checkpointed
-    # signatures — when not persisting for resume, leave it lazy rather
-    # than materializing ~bands*(1+probes) rows per doc
-    buckets = stage("buckets", lambda: explode_buckets(
-        signatures, cfg, id_col="nid"), materialize=store is not None)
-    # the multi-member survivor set IS materialized: it is tiny relative
+    # the bucket explode is cheap JVM work over the materialized
+    # signatures, so it stays lazy (never stored or checkpointed)
+    # rather than materializing ~bands*(1+probes) rows per doc; the
+    # multi-member survivor set IS materialized: it is tiny relative
     # to the explode, and candidate_pairs fans out over it from several
     # join branches
-    groups = stage("bucket_groups",
-                   lambda: bucket_arrays(buckets, cfg, id_col="nid"))
+    groups = stage("bucket_groups", lambda: bucket_arrays(
+        explode_buckets(signatures, cfg, id_col="nid"), cfg, id_col="nid"))
     mat = materialize_intermediates or store is not None
     pairs = stage("pairs", lambda: candidate_pairs(groups, cfg, id_col="nid"),
                   materialize=mat)

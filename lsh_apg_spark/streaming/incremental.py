@@ -12,9 +12,11 @@ Per batch of new pages:
   4. verify against the union text corpus;
   5. union edges, re-run CC, rewrite cluster assignments.
 
-All state lives in checkpoint tables (signatures/buckets/edges/
-clusters + the pages seen so far) — every step is a pure DataFrame
-job, so a crashed batch just re-runs."""
+All state lives in four checkpoint tables (docs — the pages seen so
+far — signatures, edges, clusters) — every step is a pure DataFrame
+job, so a crashed batch just re-runs. The old bucket rows are not
+stored: they are the explode of the stored signatures' `bhashes`, and
+parquet column pruning reads only that column back."""
 
 from __future__ import annotations
 
@@ -76,14 +78,13 @@ def dedup_increment(
                 "Re-run with the original config, or pass "
                 "on_mismatch='reset' to intentionally restart state from "
                 "this batch.")
-        for stage in ("docs", "signatures", "buckets", "edges", "clusters"):
+        for stage in ("docs", "signatures", "edges", "clusters"):
             store.invalidate(stage)
     have_state = store.exists("docs")
     if have_state:
         old_docs = store.read("docs")
         new_docs = new_docs.join(old_docs.select(id_col), id_col, "left_anti")
         old_sigs = store.read("signatures")
-        old_buckets = store.read("buckets")
         old_edges = store.read("edges")
     else:
         old_docs = None
@@ -115,14 +116,14 @@ def dedup_increment(
     if have_state:
         all_docs = old_docs.unionByName(new_docs)
         all_sigs = old_sigs.unionByName(new_sigs)
-        both = old_buckets.unionByName(new_buckets)
         # new docs PROBE the existing bucket state (the reference's
         # per-point searchLSH insert probe, src/divGraph.h:359-469):
         # only bucket keys that a new doc lands in can mint a new pair,
         # so pair generation runs over that sliver of the bucket table,
         # not the whole corpus
         touched_keys = new_buckets.select("bhash").distinct()
-        relevant = both.join(touched_keys, ["bhash"], "left_semi")
+        relevant = explode_buckets(all_sigs, cfg, id_col).join(
+            touched_keys, ["bhash"], "left_semi")
         pairs = candidate_pairs(relevant, cfg, id_col)
         new_ids = new_docs.select(F.col(id_col).alias("a"))
         new_ids_b = new_docs.select(F.col(id_col).alias("b"))
@@ -131,7 +132,6 @@ def dedup_increment(
     else:
         all_docs = new_docs
         all_sigs = new_sigs
-        both = new_buckets
         touching_new = candidate_pairs(new_buckets, cfg, id_col)
 
     new_edges = verify_edges(touching_new, all_sigs, cfg, id_col)
@@ -190,7 +190,6 @@ def dedup_increment(
     out = store.write_many({
         "docs": all_docs,
         "signatures": all_sigs,
-        "buckets": both,
         "edges": edges,
         "clusters": clusters,
     })

@@ -35,6 +35,9 @@ def test_incremental_equals_batch(spark, corpus, tmp_path):
     dedup_increment(spark, half1, store, CFG)
     final = dedup_increment(spark, half2, store, CFG)
     assert _assignments(final) == _assignments(batch)
+    # bucket rows are re-derived from the stored signatures, never stored
+    assert sorted(p.name for p in (tmp_path / "inc").iterdir()
+                  if p.is_dir()) == ["clusters", "docs", "edges", "signatures"]
 
 
 def test_incremental_redelivery_idempotent(spark, corpus, tmp_path):

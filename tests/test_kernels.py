@@ -156,31 +156,6 @@ def test_winnowing_guarantee_non_ascii():
     assert np.intersect1d(fa, fb).size > 0
 
 
-def test_shingle_hashes_batch_matches_per_doc():
-    """The batched shingle kernel (factorize + boundary-masked rolling
-    combine, kernels.shingle_hashes_batch) must be ELEMENT-IDENTICAL to
-    the per-doc kernel on every edge case: empty, None, sub-shingle
-    length, heavy repetition, unicode, long docs — the frozen-config
-    parity that keeps golden data valid."""
-    import numpy as np
-
-    rng = np.random.default_rng(3)
-    vocab = [f"w{i}" for i in range(200)]
-    texts = [
-        "", None, "one", "one two", "one two three",
-        "a a a a a a", "uniéode tökens ünd mòre hère now",
-        " ".join(rng.choice(vocab, size=300)),
-        " ".join(rng.choice(vocab, size=7)),
-        "THE Quick BROWN fox " * 40,
-    ]
-    for k in (2, 3, 5):
-        batch = kernels.shingle_hashes_batch(texts, k)
-        assert len(batch) == len(texts)
-        for t, got in zip(texts, batch):
-            ref = kernels.shingle_hashes(t or "", k, {})
-            assert np.array_equal(ref, got), (k, t)
-
-
 def test_shingle_hashes_arrow_matches_per_doc():
     """The Arrow-tokenized batch kernel (ascii_lower + split +
     dictionary_encode in C, per-doc rolling combine) must be

@@ -452,14 +452,17 @@ def test_cross_engine_fuzz_textnorm_and_tokens(spark):
     \\x0b, the U+2028/U+2029/U+0085 line terminators whose Java-$
     semantics bit in review, CR/LF mixes, composed AND decomposed
     accents) — Spark and the DuckDB oracles must agree byte-for-byte
-    on normalize_text and on the whitespace token counts. One Spark
-    job + one DuckDB query per surface: a 300-case regression fence
-    around the Java-vs-RE2 regex divergence class."""
+    on normalize_text, on the whitespace token counts and on the word
+    3-shingles of the brute-force Jaccard oracle. One Spark job + one
+    DuckDB query per surface: a 300-case regression fence around the
+    Java-vs-RE2 regex divergence class, plus a planted vertical-tab
+    document whose \\x0b only Java's \\s treats as whitespace."""
     import random
 
     import duckdb
 
-    from __spark_entry__ import _textnorm_oracle_sql, oracle_sql
+    from __spark_entry__ import (_SHINGLES_CTE, _textnorm_oracle_sql,
+                                 oracle_sql)
     from lsh_apg_spark.operators.textnorm import normalize_text
 
     alphabet = (list("ab c.\t\n\r語") +
@@ -470,6 +473,7 @@ def test_cross_engine_fuzz_textnorm_and_tokens(spark):
     rows = [(i, "".join(rng.choice(alphabet)
                         for _ in range(rng.randint(0, 40))))
             for i in range(300)]
+    rows.append((300, "alpha\x0bbeta gamma delta"))
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got_norm = {r["doc_id"]: (r["text"], r["changed"])
                 for r in normalize_text(df).collect()}
@@ -485,6 +489,14 @@ def test_cross_engine_fuzz_textnorm_and_tokens(spark):
     o_toks = {r[0]: r[1]
               for r in con.execute(oracle_sql()["token_stats"]).fetchall()}
     assert o_toks == got_toks
+    got_sh = {(r["doc_id"], r["shingle"])
+              for r in dedup.shingle_rows(df, 3).collect()}
+    o_sh = set(con.execute(
+        "WITH " + _SHINGLES_CTE + " SELECT doc_id, shingle FROM sh"
+    ).fetchall())
+    assert o_sh == got_sh
+    assert {s for d, s in got_sh if d == 300} == {
+        "alpha beta gamma", "beta gamma delta"}
 
 
 def test_cross_engine_fuzz_url_canonicalizer(spark):
@@ -627,6 +639,13 @@ def test_pack_sequences_contract(spark):
     assert st == {k: (len(v), sum(v)) for k, v in fills.items()}
     with _pytest.raises(ValueError):
         pack_sequences(docs, budget=0)
+    # non-long ids keep their type through the grouped pandas stage
+    sdocs = spark.createDataFrame([(f"d{i}", t) for i, t in rows],
+                                  "doc_id string, text string")
+    sout = pack_sequences(sdocs, budget=100, n_shards=4)
+    assert sout.schema["doc_id"].dataType.simpleString() == "string"
+    assert sorted(r["doc_id"] for r in sout.collect()) == \
+        sorted(f"d{i}" for i, _ in rows)
 
 
 def test_semdedup_matches_reference_rule(spark):
@@ -645,6 +664,9 @@ def test_semdedup_matches_reference_rule(spark):
     for j in range(10):  # planted semantic dups of vectors 0..9
         v = base[j] + 0.01 * rng.standard_normal(16)
         rows.append((200 + j, [float(x) for x in v]))
+    # a zero vector scores cosine 0 against everything (floored norm),
+    # never NaN; its id is outside the seeded centroid draw
+    rows.append((300, [0.0] * 16))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>") \
         .localCheckpoint(eager=True)
 
@@ -672,7 +694,8 @@ def test_semdedup_matches_reference_rule(spark):
     for i in range(len(ids)):
         for j in range(len(ids)):
             if ids[i] < ids[j] and cells[i] == cells[j]:
-                c = float(vecs[i] @ vecs[j]) / float(nrm[i] * nrm[j])
+                c = float(vecs[i] @ vecs[j]) / max(
+                    float(nrm[i] * nrm[j]), 1e-12)
                 if c > 0.9:
                     ki, kj = (csim[i], ids[i]), (csim[j], ids[j])
                     losers.add(ids[j] if ki < kj else ids[i])
@@ -683,7 +706,7 @@ def test_semdedup_matches_reference_rule(spark):
     assert stats["max_cell_size"] >= 2
     assert stats["n_nonempty_cells"] <= 8
 
-    # n_cells=None sizes by the IVF sqrt rule: 130 rows -> 16 cells
+    # n_cells=None sizes by the IVF sqrt rule: 131 rows -> 16 cells
     auto = dedup.semdedup(df, tau=0.9, iters=2, seed=3)
     exp16 = dedup.semdedup(df, tau=0.9, n_cells=16, iters=2, seed=3)
     assert sorted(map(tuple, auto.collect())) == \
