@@ -9,15 +9,16 @@ the staged dataflow of SURVEY.md §3.4):
 explode of the signatures' `bhashes`, never stored)
 
 Every stage optionally checkpoints through CheckpointStore (resume =
-the reference's cache-or-build ben_create / index save-load) and logs
-row counts + wall time to the MetricsSink."""
+the reference's cache-or-build ben_create / index save-load, for the
+same config and the same input only) and logs row counts + wall time
+to the MetricsSink."""
 
 from __future__ import annotations
 
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lsh_apg_spark.config import DedupConfig
@@ -66,11 +67,12 @@ def run_dedup(
     sink = MetricsSink(metrics_path) if metrics_path else None
     metrics: list[dict] = []
 
-    def stage(name: str, builder, materialize: bool = True) -> DataFrame:
+    def stage(name: str, builder, materialize: bool = True,
+              meta=None) -> DataFrame:
         t0 = time.monotonic()
         if store is not None:
             resumed = store.exists(name)
-            df = store.get_or_create(name, builder)
+            df = store.get_or_create(name, builder, meta)
             rows = store.lineage(name)["rows"]
             row = {"rows": rows, "resumed": resumed,
                    "wall_sec": round(time.monotonic() - t0, 3)}
@@ -88,6 +90,20 @@ def run_dedup(
         return df
 
     all_docs = pages.select(id_col, text_col)
+    keyed = all_docs.select(
+        F.col(id_col), F.md5(F.col(text_col).cast("binary")).alias("_k"))
+
+    # a checkpoint resumes only for the input that produced it: every
+    # sidecar records an order-free fingerprint of (url, text), and a
+    # stage whose fingerprint differs is rebuilt. A fresh rep_map build
+    # observes it on its own write job; resuming costs one input scan.
+    # Decimal accumulation: a sum of int64 hashes overflows LongType
+    # under ANSI mode.
+    fingerprint = F.sum(
+        F.xxhash64(id_col, "_k").cast("decimal(38,0)")).alias("fp")
+    fp_seen = Observation("input_fingerprint")
+    if store is not None and store.exists("rep_map"):
+        store.input_id = str(keyed.agg(fingerprint).first()["fp"])
 
     # stage 0 — exact-duplicate collapse: identical texts (jaccard 1 >=
     # any tau) are folded onto their min-id representative BEFORE the
@@ -107,13 +123,16 @@ def run_dedup(
         # dup-group size over 24-byte rows, fine even for boilerplate
         # pages duplicated 10^7 times; the join form's AQE skew-split
         # is the fallback if a corpus ever breaks that assumption.
-        keyed = all_docs.select(
-            F.col(id_col), F.md5(F.col(text_col).cast("binary")).alias("_k"))
-        return keyed.select(
+        src = keyed.observe(fp_seen, fingerprint) if store is not None \
+            else keyed
+        return src.select(
             id_col,
             F.min(id_col).over(Window.partitionBy("_k")).alias("_rep"))
 
-    rep_map = stage("rep_map", build_rep_map)
+    rep_map = stage("rep_map", build_rep_map,
+                    meta=lambda: {"input_id": str(fp_seen.get["fp"])})
+    if store is not None:
+        store.input_id = store.lineage("rep_map")["input_id"]
 
     # compact 64-bit ids for everything between here and the final
     # url mapping: the banding/pair/CC stages are shuffle- and

@@ -1,9 +1,10 @@
 """SparkSession factory tuned for the dedup pipeline.
 
-Local-mode defaults match the sandbox (local[32], single JVM); on a real
-cluster the same settings apply except master/memory come from
-spark-submit. AQE is on so hot LSH buckets that survive our explicit
-caps are further split at runtime (skew-join splitting)."""
+Local-mode defaults fit the host: local[SPARK_GRAFT_CPUS] (else one
+thread per core) and a driver heap of half the host memory, capped at
+16g; on a real cluster the same settings apply except master/memory
+come from spark-submit. AQE is on so hot LSH buckets that survive our
+explicit caps are further split at runtime (skew-join splitting)."""
 
 from __future__ import annotations
 
@@ -12,13 +13,26 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """Half of MemTotal, capped at 16g: a local-mode heap larger than
+    the host lets the kernel OOM-kill the JVM instead of Spark
+    spilling."""
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(line.split()[1]) for line in f
+                       if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "16g"
+    return f"{max(1, min(16 * 1024, kib // 2 // 1024))}m"
+
+
 def get_spark(
     app_name: str = "lsh_apg_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or \
-        f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1
+    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cpus}]"
     if shuffle_partitions is None:
         # local[N] → N shuffle partitions; a real cluster sets this to
         # 2-3x total cores via spark-submit --conf.
@@ -38,7 +52,8 @@ def get_spark(
         # collections dominate (measured 1.6x end-to-end slowdown at
         # 48g vs 16g on the 400k-doc job — cache-hostile giant young
         # gen). Cluster executors size their own heaps via spark-submit.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # the banding stage hash-aggregates collect_list over millions

@@ -4,13 +4,19 @@ mutable state — SURVEY.md §2.10).
 
 Per batch of new pages:
 
-  1. anti-join against already-seen urls (idempotent re-delivery);
-  2. signatures + bucket rows for the NEW docs only;
-  3. candidate pairs = new-vs-all equi-join on bucket keys (the new
+  1. anti-join against already-seen urls (idempotent re-delivery),
+     materialized once; its row count rides that same job;
+  2. no new doc left (a full re-delivery): return the stored cluster
+     table and write nothing;
+  3. signatures for the NEW docs only, materialized once — the only
+     run of the signature UDF in the batch;
+  4. candidate pairs = new-vs-all equi-join on bucket keys (the new
      docs probe the existing 'hash table', exactly like the
      reference's per-point searchLSH probe) + new-vs-new pairs;
-  4. verify against the union text corpus;
-  5. union edges, re-run CC, rewrite cluster assignments.
+  5. verify against the union text corpus, the new edges materialized
+     once (the edges write and the CC both read them);
+  6. union edges, re-run CC over the touched components, rewrite the
+     state tables.
 
 All state lives in four checkpoint tables (docs — the pages seen so
 far — signatures, edges, clusters) — every step is a pure DataFrame
@@ -20,7 +26,7 @@ parquet column pruning reads only that column back."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from lsh_apg_spark.config import DedupConfig
@@ -49,7 +55,8 @@ def dedup_increment(
     ``metrics``, if given, receives cc_nodes/cc_edges — the size of the
     subgraph the batch actually re-clustered (bounded by TOUCHED
     components + the new docs, not the accumulated corpus) — plus
-    contaminated_dropped when ``eval_docs`` is set.
+    contaminated_dropped when ``eval_docs`` is set. All are 0 for a
+    batch with no new url, which writes nothing.
 
     ``eval_docs``: optional held-out reference set (benchmark/eval
     documents). New docs whose shingle-Jaccard with any eval doc
@@ -89,7 +96,25 @@ def dedup_increment(
     else:
         old_docs = None
 
-    new_sigs = compute_signatures(new_docs, cfg, id_col, text_col)
+    # every later step reads the batch's new docs, signatures and edges
+    # several times (the state writes, the CC, the metrics); each is
+    # materialized once, so no write re-runs the anti-join, the
+    # signature UDF or the pair/verify pipeline. The new-doc count
+    # rides the materializing job.
+    seen = Observation("new_docs")
+    new_docs = new_docs.observe(seen, F.count(F.lit(1)).alias("n")) \
+        .localCheckpoint(eager=True)
+    if seen.get["n"] == 0 and have_state and store.exists("clusters"):
+        # full re-delivery: every url is already in the state, so the
+        # stored assignment is the answer and nothing is rewritten
+        if metrics is not None:
+            metrics.update(cc_nodes=0, cc_edges=0)
+            if eval_docs is not None:
+                metrics["contaminated_dropped"] = 0
+        return store.read("clusters")
+
+    new_sigs = compute_signatures(new_docs, cfg, id_col, text_col) \
+        .localCheckpoint(eager=True)
 
     if eval_docs is not None:
         from lsh_apg_spark.operators.decontaminate import (
@@ -134,7 +159,8 @@ def dedup_increment(
         all_sigs = new_sigs
         touching_new = candidate_pairs(new_buckets, cfg, id_col)
 
-    new_edges = verify_edges(touching_new, all_sigs, cfg, id_col)
+    new_edges = verify_edges(touching_new, all_sigs, cfg, id_col) \
+        .localCheckpoint(eager=True)
     edges = (old_edges.unionByName(new_edges).dropDuplicates(["a", "b"])
              if have_state else new_edges)
 
@@ -147,7 +173,7 @@ def dedup_increment(
     # membership of `a` implies membership of the whole edge).
     if have_state and store.exists("clusters"):
         old_clusters = store.read("clusters")
-        ne = new_edges.select("a", "b").localCheckpoint(eager=True)
+        ne = new_edges.select("a", "b")
         touched_nodes = (
             ne.select(F.col("a").alias(id_col))
             .unionByName(ne.select(F.col("b").alias(id_col)))

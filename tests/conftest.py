@@ -12,5 +12,7 @@ def pytest_configure(config):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("lsh_apg_spark_tests", master="local[8]", shuffle_partitions=8)
+    # master from SPARK_GRAFT_CPUS (else the host's cores), so the
+    # suite never runs more task threads than the host has
+    s = get_spark("lsh_apg_spark_tests", shuffle_partitions=8)
     yield s

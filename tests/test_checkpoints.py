@@ -56,3 +56,31 @@ def test_pipeline_resume_identical(spark, tmp_path):
         assert resumed[s], f"stage {s} was rebuilt: {resumed}"
     second = sorted((r["url"], r["cluster_id"]) for r in r2.clusters.collect())
     assert first == second
+
+
+def test_pipeline_resume_rejects_changed_input(spark, tmp_path):
+    """A checkpoint resumes only for the input that produced it: an
+    80-doc run followed by a 120-doc run on the same checkpoint_dir
+    must rebuild, label all 120 urls, and match a run with no store;
+    re-running the 120 docs then resumes every stage."""
+    ckpt = str(tmp_path / "ckpt")
+
+    def pages(n):
+        fx = generate_pages(n_docs=n, seed=7)
+        return spark.createDataFrame(fx.pages, schema=PAGES_SCHEMA)
+
+    run_dedup(spark, pages(80), CFG, checkpoint_dir=ckpt,
+              include_substring=False)
+    big = pages(120)
+    r2 = run_dedup(spark, big, CFG, checkpoint_dir=ckpt,
+                   include_substring=False)
+    resumed = [m["stage"] for m in r2.metrics if m.get("resumed")]
+    assert resumed == [], f"stale stages resumed: {resumed}"
+    got = sorted((r["url"], r["cluster_id"]) for r in r2.clusters.collect())
+    ref = run_dedup(spark, big, CFG, include_substring=False).clusters
+    assert len(got) == 120
+    assert got == sorted((r["url"], r["cluster_id"]) for r in ref.collect())
+
+    r3 = run_dedup(spark, big, CFG, checkpoint_dir=ckpt,
+                   include_substring=False)
+    assert all(m["resumed"] for m in r3.metrics if "resumed" in m)

@@ -6,6 +6,7 @@ batch run, and re-delivery must be idempotent."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from lsh_apg_spark.config import DedupConfig
 from lsh_apg_spark.fixtures import PAGES_SCHEMA, generate_pages
@@ -46,6 +47,67 @@ def test_incremental_redelivery_idempotent(spark, corpus, tmp_path):
     a1 = _assignments(first)
     again = dedup_increment(spark, corpus, store, CFG)  # full re-delivery
     assert _assignments(again) == a1
+
+
+def _state_files(root):
+    """Every state file under the store -> its bytes: part-file names
+    and sidecars (with their written_at_epoch) included."""
+    return {str(p.relative_to(root)): p.read_bytes()
+            for p in sorted(root.rglob("*")) if p.is_file()}
+
+
+def test_incremental_redelivery_writes_nothing(spark, corpus, tmp_path):
+    """A batch with no new url is a no-op: the stored assignment comes
+    back and not one state file is rewritten."""
+    root = tmp_path / "inc_noop"
+    store = CheckpointStore(spark, str(root), CFG)
+    a1 = _assignments(dedup_increment(spark, corpus, store, CFG))
+    before = _state_files(root)
+    metrics: dict = {}
+    again = dedup_increment(spark, corpus, store, CFG, metrics=metrics)
+    assert _assignments(again) == a1
+    assert metrics == {"cc_nodes": 0, "cc_edges": 0}
+    assert _state_files(root) == before
+
+
+def test_incremental_mixed_batch_equals_batch(spark, corpus, tmp_path):
+    """A batch that is half re-delivered, half new adds only the new
+    half and still lands on the one-shot assignment."""
+    urls = sorted(r["url"] for r in corpus.select("url").collect())
+    store = CheckpointStore(spark, str(tmp_path / "inc_mixed"), CFG)
+    dedup_increment(spark, corpus.filter(F.col("url").isin(urls[:80])),
+                    store, CFG)
+    mixed = corpus.filter(F.col("url").isin(urls[40:]))
+    final = dedup_increment(spark, mixed, store, CFG)
+    batch = run_dedup(spark, corpus, CFG, include_substring=False).clusters
+    assert _assignments(final) == _assignments(batch)
+    assert store.lineage("docs")["rows"] == len(urls)
+
+
+def test_incremental_batch_fully_decontaminated(spark, tmp_path):
+    """New docs that eval_docs removes entirely still commit a batch:
+    the state stays readable, the dropped doc never enters it, and the
+    assignment keeps every earlier doc's label."""
+    base = " ".join(f"bench{i}" for i in range(60))
+    evals = spark.createDataFrame([("e0", base)], "url string, text string")
+    clean = [("p_clean1", " ".join(f"doc{i}" for i in range(60))),
+             ("p_clean2", " ".join(f"page{i}" for i in range(60)))]
+    store = CheckpointStore(spark, str(tmp_path / "inc_decon"), CFG)
+    dedup_increment(spark, spark.createDataFrame(clean, "url string, text string"),
+                    store, CFG, eval_docs=evals)
+    batch = spark.createDataFrame(
+        [clean[0], ("p_dirty", base.replace("bench30", "x"))],
+        "url string, text string")
+    metrics: dict = {}
+    out = dedup_increment(spark, batch, store, CFG, metrics=metrics,
+                          eval_docs=evals)
+    assert _assignments(out) == [("p_clean1", "p_clean1"),
+                                 ("p_clean2", "p_clean2")]
+    assert metrics["contaminated_dropped"] == 1
+    for name in ("docs", "signatures", "edges", "clusters"):
+        assert store.status(name) == "ok", name
+    assert store.lineage("docs")["rows"] == 2
+    assert _assignments(store.read("clusters")) == _assignments(out)
 
 
 def test_incremental_cc_bounded_by_touched_components(spark, tmp_path):
