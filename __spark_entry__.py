@@ -580,8 +580,8 @@ def _q_ann_lsh(spark, sf):
     # explicit documented-default knobs: the timed bench row must stay
     # comparable round-over-round and must not fold the auto-calibration
     # probe (a brute-force pass) into its wall; the no-knob calibrated
-    # path is evidenced separately (bench ann_eval "lsh_auto" rows,
-    # tests/test_operators.py::test_lsh_auto_calibration_clustered).
+    # path is evidenced separately
+    # (tests/test_operators.py::test_lsh_auto_calibration_clustered).
     # Oracle-verified since r5: with explicit knobs the whole path is
     # deterministic given the seeded planes, which ship as a parquet
     # fixture the DuckDB replay reads (_ann_lsh_oracle_sql); the
@@ -702,8 +702,8 @@ def _q_ann_graph_incr(spark, sf):
 def _q_ann_ivf(spark, sf):
     """IVF-bucketed ANN. Explicit knobs: this entry is also a timed
     bench row, so it must not pay the one-shot auto-calibration probe
-    on every invocation (ann.calibrate_ivf_knobs has its own test +
-    clustered bench row). Oracle-verified since r5: the quantizer init
+    on every invocation (ann.calibrate_ivf_knobs has its own test).
+    Oracle-verified since r5: the quantizer init
     is an md5-ordered seeded draw (engine-common hash), so DuckDB
     replays the whole chain — init, unrolled Lloyd rounds, assignment,
     probe, exact re-rank — from first principles with margin guards on

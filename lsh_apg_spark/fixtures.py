@@ -72,114 +72,11 @@ def _mk_row(i: int, text: str, lang: str) -> dict:
     }
 
 
-def _gen_chunk(args: tuple) -> "PagesFixture":
-    """Worker for generate_pages(n_jobs>1): one independent chunk with
-    its own derived seed and a disjoint id range. Module-level so the
-    spawn context can pickle it."""
-    idx, chunk_n, seed, chunk_docs = args
-    return generate_pages(n_docs=chunk_n, seed=seed + 1_000_003 * idx,
-                          id_offset=idx * chunk_docs)
-
-
-def _write_chunk(args: tuple) -> str:
-    """Worker for write_pages_parquet: generate one chunk and write it
-    straight to its own parquet file — the corpus never aggregates in
-    any single process."""
-    idx, chunk_n, seed, chunk_docs, out_dir = args
-    fx = generate_pages(n_docs=chunk_n, seed=seed + 1_000_003 * idx,
-                        id_offset=idx * chunk_docs)
-    path = f"{out_dir}/chunk_{idx:05d}.parquet"
-    # pandas defaults to TIMESTAMP(NANOS), which Spark's parquet
-    # reader rejects (PARQUET_TYPE_ILLEGAL) — coerce to micros, the
-    # engine's native timestamp precision
-    fx.pages.to_parquet(path, index=False, coerce_timestamps="us",
-                        allow_truncated_timestamps=True)
-    return path
-
-
-def write_pages_parquet(n_docs: int, seed: int, out_dir: str,
-                        n_jobs: int = 16,
-                        chunk_docs: int = 200_000) -> str:
-    """Generate the synthetic corpus as a parquet DIRECTORY, one file
-    per chunk, written by parallel workers — for corpora too big to
-    ship through createDataFrame (a 6.4M-doc frame is ~20 GB of
-    pandas->Arrow conversion on the driver heap, which is what killed
-    the r4/r5 scaling-cell attempts). Same chunk layout and seeds as
-    generate_pages(n_jobs>1), so the corpus is deterministic in
-    (n_docs, seed, chunk_docs). Idempotent via a _DONE marker; callers
-    spark.read.parquet(out_dir)."""
-    import multiprocessing as mp
-
-    done = os.path.join(out_dir, "_DONE")
-    params = f"{n_docs} {seed} {chunk_docs}"
-    if os.path.exists(done):
-        with open(done) as f:
-            found = f.read().strip()
-        if found != params:
-            # a dir generated under different params must never be
-            # silently reused — a scaling pair would then compare
-            # byte-different corpora with no error (review finding)
-            raise ValueError(
-                f"corpus dir {out_dir} holds params ({found}), "
-                f"requested ({params}) — remove the dir or pick another")
-        return out_dir
-    os.makedirs(out_dir, exist_ok=True)
-    tasks = []
-    off = idx = 0
-    while off < n_docs:
-        cn = min(chunk_docs, n_docs - off)
-        tasks.append((idx, cn, seed, chunk_docs, out_dir))
-        off += cn
-        idx += 1
-    with mp.get_context("spawn").Pool(min(n_jobs, len(tasks))) as pool:
-        pool.map(_write_chunk, tasks)
-    with open(done, "w") as f:
-        f.write(params + "\n")
-    return out_dir
-
-
 def generate_pages(n_docs: int = 400, seed: int = 42,
-                   hot_group_size: int | None = None,
-                   id_offset: int = 0,
-                   n_jobs: int = 1,
-                   chunk_docs: int = 200_000) -> PagesFixture:
-    """Deterministic synthetic corpus; function of (n_docs, seed[,
-    chunk layout]) only. ``n_jobs > 1`` generates fixed-size chunks in
-    parallel worker processes — each chunk is an independent corpus
-    with a derived seed (seed + 1_000_003·chunk_idx) and a disjoint id
-    range, so the result depends on (n_docs, seed, chunk_docs) but NOT
-    on the worker count. Single-core generation of a multi-million-doc
-    corpus is what twice blew the scaling harness's subprocess window
-    (VERDICT r4 item 5: ~45 min at 6.4M docs); 16 workers cut it to
-    ~3 min. Note the planted structure then repeats PER CHUNK (e.g.
-    one hot boilerplate group per 200k-doc chunk instead of one giant
-    one) — same distribution, bounded hot-group size; callers that pin
-    exact single-corpus structure (tests) keep n_jobs=1, which is
-    byte-identical to the pre-r5 generator."""
-    if n_jobs > 1 and n_docs > chunk_docs:
-        if hot_group_size is not None:
-            raise ValueError("hot_group_size is a single-corpus knob; "
-                             "use n_jobs=1")
-        import multiprocessing as mp
-        tasks = []
-        off = idx = 0
-        while off < n_docs:
-            cn = min(chunk_docs, n_docs - off)
-            tasks.append((idx, cn, seed, chunk_docs))
-            off += cn
-            idx += 1
-        # spawn, not fork: the caller may hold a live JVM (py4j) whose
-        # state must not leak into workers
-        with mp.get_context("spawn").Pool(min(n_jobs, len(tasks))) as pool:
-            parts = pool.map(_gen_chunk, tasks)
-        fx = PagesFixture(
-            pages=pd.concat([p.pages for p in parts], ignore_index=True))
-        for p in parts:
-            fx.exact_groups += p.exact_groups
-            fx.near_groups += p.near_groups
-            fx.substring_pairs += p.substring_pairs
-            fx.hot_group += p.hot_group
-        return fx
+                   hot_group_size: int | None = None) -> PagesFixture:
+    """Deterministic synthetic corpus; function of (n_docs, seed) only
+    (plus ``hot_group_size``, which overrides the hot group's default
+    size of max(8, n_docs // 10))."""
     rng = random.Random(seed)
     vocab = _vocab(rng)
     rows: list[dict] = []
@@ -191,7 +88,7 @@ def generate_pages(n_docs: int = 400, seed: int = 42,
     def lang() -> str:
         return rng.choice(_LANGS)
 
-    i = id_offset
+    i = 0
     n_hot = hot_group_size if hot_group_size is not None else max(8, n_docs // 10)
     n_exact = max(2, int(n_docs * 0.20))
     n_near = max(2, int(n_docs * 0.15))

@@ -18,32 +18,8 @@ tie-break SURVEY.md §7.4 demands."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-
-
-def cap_degree(edges: DataFrame, max_degree: int,
-               sim_col: str = "jaccard") -> DataFrame:
-    """Degree cap on an undirected edge list (maps A3 bounded top-T per
-    node, reference chooseNN_simple, src/divGraph.h:568-574): per
-    endpoint keep the `max_degree` strongest edges; an edge survives if
-    EITHER endpoint keeps it, so low-degree nodes never lose their only
-    links. Bounds CC fan-in on pathological graphs. NOTE: like the
-    reference's T-bound, this is lossy on adversarial topologies (a
-    bridge between two capped hubs can drop) — the default pipeline
-    does not apply it; it exists for graph-size budgeting."""
-    sym = edges.unionByName(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"),
-                     *[c for c in edges.columns if c not in ("a", "b")]))
-    w = Window.partitionBy("a").orderBy(F.desc(sim_col), F.asc("b"))
-    kept = (
-        sym.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= max_degree)
-        .select(F.least("a", "b").alias("a"),
-                F.greatest("a", "b").alias("b"))
-        .dropDuplicates(["a", "b"])
-    )
-    return edges.join(kept, ["a", "b"], "left_semi")
 
 
 def connected_components(

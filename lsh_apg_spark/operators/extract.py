@@ -34,14 +34,6 @@ def default_extractor(html: Column) -> Column:
     return F.regexp_replace(F.decode(html, "UTF-8"), r"<[^>]*>", "")
 
 
-def extract_text(pages: DataFrame, html_col: str = "html",
-                 extractor: Callable[[Column], Column] = default_extractor,
-                 ) -> DataFrame:
-    """Adds ``extracted_text`` from the html column."""
-    return pages.withColumn(
-        "extracted_text", extractor(F.col(html_col)))
-
-
 def verify_extraction(pages: DataFrame, html_col: str = "html",
                       text_col: str = "text",
                       extractor: Callable[[Column], Column]

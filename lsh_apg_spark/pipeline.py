@@ -53,22 +53,13 @@ def run_dedup(
     checkpoint_dir: str | None = None,
     metrics_path: str | None = None,
     include_substring: bool = True,
-    materialize_intermediates: bool = True,
 ) -> DedupResult:
-    """``materialize_intermediates=False`` skips the pairs/edges stage
-    barriers (each a localCheckpoint + count job) when no checkpoint
-    store is attached: every frame is still computed exactly once
-    (verify reads pairs once; CC materializes the edge union itself),
-    but the per-stage row counts/walls for those two stages are not
-    recorded. Use for latency-sensitive small-corpus runs; keep the
-    default for observability and any run that resumes."""
     cfg = cfg or DedupConfig()
     store = CheckpointStore(spark, checkpoint_dir, cfg) if checkpoint_dir else None
     sink = MetricsSink(metrics_path) if metrics_path else None
     metrics: list[dict] = []
 
-    def stage(name: str, builder, materialize: bool = True,
-              meta=None) -> DataFrame:
+    def stage(name: str, builder, meta=None) -> DataFrame:
         t0 = time.monotonic()
         if store is not None:
             resumed = store.exists(name)
@@ -77,12 +68,9 @@ def run_dedup(
             row = {"rows": rows, "resumed": resumed,
                    "wall_sec": round(time.monotonic() - t0, 3)}
         else:
-            df = builder()
-            if materialize:
-                # truncate lineage between shuffle-heavy stages
-                df = df.localCheckpoint(eager=True)
-            row = {"rows": df.count() if materialize else None,
-                   "resumed": False,
+            # truncate lineage between shuffle-heavy stages
+            df = builder().localCheckpoint(eager=True)
+            row = {"rows": df.count(), "resumed": False,
                    "wall_sec": round(time.monotonic() - t0, 3)}
         metrics.append({"stage": name, **row})
         if sink is not None:
@@ -163,11 +151,9 @@ def run_dedup(
     # join branches
     groups = stage("bucket_groups", lambda: bucket_arrays(
         explode_buckets(signatures, cfg, id_col="nid"), cfg, id_col="nid"))
-    mat = materialize_intermediates or store is not None
-    pairs = stage("pairs", lambda: candidate_pairs(groups, cfg, id_col="nid"),
-                  materialize=mat)
+    pairs = stage("pairs", lambda: candidate_pairs(groups, cfg, id_col="nid"))
     edges = stage("edges", lambda: verify_edges(
-        pairs, signatures, cfg, id_col="nid"), materialize=mat)
+        pairs, signatures, cfg, id_col="nid"))
 
     sub = None
     if include_substring:

@@ -34,9 +34,11 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cpus}]"
     if shuffle_partitions is None:
-        # local[N] → N shuffle partitions; a real cluster sets this to
-        # 2-3x total cores via spark-submit --conf.
-        n = master[master.find("[") + 1:master.find("]")] if "[" in master else "32"
+        # local[N] (or local[N,F], F = task retries) → N shuffle
+        # partitions; a real cluster sets this to 2-3x total cores via
+        # spark-submit --conf.
+        n = (master[master.find("[") + 1:master.find("]")].split(",")[0]
+             if "[" in master else "32")
         shuffle_partitions = 32 if n == "*" else max(8, int(n))
     builder = (
         SparkSession.builder.master(master)

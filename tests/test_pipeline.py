@@ -89,6 +89,16 @@ def test_every_url_assigned_once(fixture_bundle, result):
     c = result.clusters
     assert c.count() == n_docs
     assert c.select("url").distinct().count() == n_docs
+    # every stage materializes and records its row count and wall time
+    stages = [m for m in result.metrics if m["stage"] != "bucket_stats"]
+    assert [m["stage"] for m in stages] == [
+        "rep_map", "signatures", "bucket_groups", "pairs", "edges",
+        "clusters"]
+    for m in stages:
+        assert type(m["rows"]) is int, m
+        assert isinstance(m["wall_sec"], float), m
+    assert next(m["rows"] for m in stages if m["stage"] == "clusters") \
+        == n_docs
 
 
 def test_hot_group_salted_and_connected(fixture_bundle, result):
@@ -146,44 +156,6 @@ def test_substring_pass(spark, fixture_bundle):
     missed = planted - found
     assert not missed, f"substring pairs missed: {sorted(missed)[:5]}"
     assert all(r["lcs_len"] >= CFG.min_substring_len for r in rows)
-
-
-def test_generate_pages_chunked_parallel_deterministic():
-    """Chunked parallel fixture generation (VERDICT r4 item 5): the
-    corpus is a function of (n_docs, seed, chunk_docs) — NOT of the
-    worker count — ids stay globally unique across chunks, and the
-    planted structure survives concatenation."""
-    a = generate_pages(n_docs=900, seed=42, n_jobs=2, chunk_docs=300)
-    b = generate_pages(n_docs=900, seed=42, n_jobs=4, chunk_docs=300)
-    assert a.pages.equals(b.pages)
-    assert len(a.pages) == 900
-    assert a.pages["url"].is_unique
-    # per-chunk planted structure: 3 chunks -> 3 hot groups' worth of
-    # urls, and every planted url exists in the corpus
-    urls = set(a.pages["url"])
-    assert a.hot_group and set(a.hot_group) <= urls
-    assert a.exact_groups and all(set(g) <= urls for g in a.exact_groups)
-    # n_jobs=1 at sub-chunk size is the byte-identical legacy path
-    c = generate_pages(n_docs=200, seed=42)
-    d = generate_pages(n_docs=200, seed=42, n_jobs=8, chunk_docs=300)
-    assert c.pages.equals(d.pages)
-
-
-def test_write_pages_parquet_matches_inmemory(spark, tmp_path):
-    """The disk-chunked corpus writer (used by the scaling harness at
-    sizes where createDataFrame's driver-side Arrow conversion OOMs)
-    produces row-identical data to the in-memory chunked generator,
-    through a real Spark parquet scan (timestamp precision included)."""
-    from lsh_apg_spark.fixtures import write_pages_parquet
-
-    out = str(tmp_path / "pages_pq")
-    write_pages_parquet(900, 42, out, n_jobs=3, chunk_docs=300)
-    df = spark.read.parquet(out)
-    fx = generate_pages(n_docs=900, seed=42, n_jobs=2, chunk_docs=300)
-    mem = spark.createDataFrame(fx.pages, schema=PAGES_SCHEMA)
-    assert df.count() == 900
-    assert df.exceptAll(mem).count() == 0
-    assert mem.exceptAll(df).count() == 0
 
 
 def test_driver_contract_full_oracle_coverage():

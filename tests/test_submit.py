@@ -71,3 +71,12 @@ def test_submit_arg_validation():
     with pytest.raises(SystemExit):
         submit_dedup.main(["--input", "a", "--synthesize", "5",
                            "--output", "/tmp/x"])  # both
+
+
+def test_get_spark_accepts_local_with_retries(spark):
+    """``local[N,F]`` (N threads, F task attempts) is a valid master:
+    the shuffle-partition default reads N, not the whole bracket."""
+    from lsh_apg_spark.session import get_spark
+
+    s = get_spark(master="local[2,3]")
+    assert s.conf.get("spark.sql.shuffle.partitions") == "8"
