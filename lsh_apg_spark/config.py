@@ -69,10 +69,12 @@ class DedupConfig:
     # UTF-8 byte units to Unicode code points — non-ASCII corpora hash
     # differently. v4: signatures dropped the unread `minhash` column
     # and the incremental store no longer keeps a `buckets` table.
+    # v5: the incremental store keeps `docs` as a url ledger and
+    # `edges` as endpoints only (a, b).
     # NB: the incremental store FAILS LOUDLY on a version mismatch
     # instead of silently restarting state (streaming/incremental.py,
     # ADVICE r2).
-    SCHEMA_VERSION = 4
+    SCHEMA_VERSION = 5
 
     def config_id(self) -> str:
         """Stable identity string stored beside every checkpoint."""
@@ -80,5 +82,3 @@ class DedupConfig:
         return f"v{self.SCHEMA_VERSION}|" + \
             "|".join(f"{k}={v}" for k, v in items)
 
-
-DEFAULT_CONFIG = DedupConfig()

@@ -10,8 +10,9 @@ explode of the signatures' `bhashes`, never stored)
 
 Every stage optionally checkpoints through CheckpointStore (resume =
 the reference's cache-or-build ben_create / index save-load, for the
-same config and the same input only) and logs row counts + wall time
-to the MetricsSink."""
+same config and the same input only) and records its row count + wall
+time in ``DedupResult.metrics``. Pages follow the pages contract:
+``url`` identifies a page, ``text`` is its content."""
 
 from __future__ import annotations
 
@@ -31,7 +32,6 @@ from lsh_apg_spark.operators.signatures import compute_signatures
 from lsh_apg_spark.operators.substring import substring_edges
 from lsh_apg_spark.operators.verify import verify_edges
 from lsh_apg_spark.sources.checkpoints import CheckpointStore
-from lsh_apg_spark.sources.metrics import MetricsSink
 
 
 @dataclass
@@ -48,15 +48,11 @@ def run_dedup(
     spark: SparkSession,
     pages: DataFrame,
     cfg: DedupConfig | None = None,
-    id_col: str = "url",
-    text_col: str = "text",
     checkpoint_dir: str | None = None,
-    metrics_path: str | None = None,
     include_substring: bool = True,
 ) -> DedupResult:
     cfg = cfg or DedupConfig()
     store = CheckpointStore(spark, checkpoint_dir, cfg) if checkpoint_dir else None
-    sink = MetricsSink(metrics_path) if metrics_path else None
     metrics: list[dict] = []
 
     def stage(name: str, builder, meta=None) -> DataFrame:
@@ -73,13 +69,11 @@ def run_dedup(
             row = {"rows": df.count(), "resumed": False,
                    "wall_sec": round(time.monotonic() - t0, 3)}
         metrics.append({"stage": name, **row})
-        if sink is not None:
-            sink.log(name, **row)
         return df
 
-    all_docs = pages.select(id_col, text_col)
+    all_docs = pages.select("url", "text")
     keyed = all_docs.select(
-        F.col(id_col), F.md5(F.col(text_col).cast("binary")).alias("_k"))
+        F.col("url"), F.md5(F.col("text").cast("binary")).alias("_k"))
 
     # a checkpoint resumes only for the input that produced it: every
     # sidecar records an order-free fingerprint of (url, text), and a
@@ -88,7 +82,7 @@ def run_dedup(
     # Decimal accumulation: a sum of int64 hashes overflows LongType
     # under ANSI mode.
     fingerprint = F.sum(
-        F.xxhash64(id_col, "_k").cast("decimal(38,0)")).alias("fp")
+        F.xxhash64("url", "_k").cast("decimal(38,0)")).alias("fp")
     fp_seen = Observation("input_fingerprint")
     if store is not None and store.exists("rep_map"):
         store.input_id = str(keyed.agg(fingerprint).first()["fp"])
@@ -114,8 +108,8 @@ def run_dedup(
         src = keyed.observe(fp_seen, fingerprint) if store is not None \
             else keyed
         return src.select(
-            id_col,
-            F.min(id_col).over(Window.partitionBy("_k")).alias("_rep"))
+            "url",
+            F.min("url").over(Window.partitionBy("_k")).alias("_rep"))
 
     rep_map = stage("rep_map", build_rep_map,
                     meta=lambda: {"input_id": str(fp_seen.get["fp"])})
@@ -135,14 +129,14 @@ def run_dedup(
     # paranoid runs: assert id_map.count() == id_map.select("_nid")
     # .distinct().count().
     id_map = (
-        rep_map.filter(F.col(id_col) == F.col("_rep"))
-        .select(id_col, F.xxhash64(F.col(id_col), F.lit(17)).alias("_nid"))
+        rep_map.filter(F.col("url") == F.col("_rep"))
+        .select("url", F.xxhash64(F.col("url"), F.lit(17)).alias("_nid"))
     )
-    docs = id_map.join(all_docs, id_col).select(
-        F.col("_nid").alias("nid"), text_col)
+    docs = id_map.join(all_docs, "url").select(
+        F.col("_nid").alias("nid"), "text")
 
     signatures = stage("signatures", lambda: compute_signatures(
-        docs, cfg, id_col="nid", text_col=text_col))
+        docs, cfg, id_col="nid"))
     # the bucket explode is cheap JVM work over the materialized
     # signatures, so it stays lazy (never stored or checkpointed)
     # rather than materializing ~bands*(1+probes) rows per doc; the
@@ -158,7 +152,7 @@ def run_dedup(
     sub = None
     if include_substring:
         sub = stage("substring_edges", lambda: substring_edges(
-            docs, cfg, id_col="nid", text_col=text_col))
+            docs, cfg, id_col="nid"))
 
     def build_clusters() -> DataFrame:
         e = edges.select("a", "b")
@@ -173,14 +167,17 @@ def run_dedup(
         members = nid_clusters.withColumnRenamed("cluster_id", "_lab") \
             .withColumnRenamed("nid", "_nid").join(id_map, "_nid")
         rep_clusters = members.select(
-            F.col(id_col).alias("_rep"),
-            F.min(id_col).over(Window.partitionBy("_lab"))
+            F.col("url").alias("_rep"),
+            F.min("url").over(Window.partitionBy("_lab"))
             .alias("cluster_id"))
         # expand representative clusters back to every url; the rep is
         # its exact-group's min url, so cluster_id == global min member
-        return rep_map.join(rep_clusters, "_rep").select(id_col, "cluster_id")
+        return rep_map.join(rep_clusters, "_rep").select("url", "cluster_id")
 
-    clusters = stage("clusters", build_clusters)
+    # the substring edges change the graph, so a cluster table built
+    # with them is a different stage: neither variant resumes the other
+    clusters = stage("clusters_substring" if include_substring
+                     else "clusters", build_clusters)
 
     def _edges_with_urls(df: DataFrame | None) -> DataFrame | None:
         """Map nid edge endpoints back to urls for the exposed result
@@ -188,9 +185,9 @@ def run_dedup(
         if df is None:
             return None
         ua = id_map.select(F.col("_nid").alias("a"),
-                           F.col(id_col).alias("_ua"))
+                           F.col("url").alias("_ua"))
         ub = id_map.select(F.col("_nid").alias("b"),
-                           F.col(id_col).alias("_ub"))
+                           F.col("url").alias("_ub"))
         others = [c for c in df.columns if c not in ("a", "b")]
         return (
             df.join(ua, "a").join(ub, "b")
@@ -206,8 +203,6 @@ def run_dedup(
     stats = bucket_stats_from_groups(
         groups, cfg, total_bucket_rows).collect()[0].asDict()
     metrics.append({"stage": "bucket_stats", **stats})
-    if sink is not None:
-        sink.log("bucket_stats", **stats)
 
     return DedupResult(signatures=signatures,
                        pairs=_edges_with_urls(pairs),

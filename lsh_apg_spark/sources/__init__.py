@@ -1,4 +1,4 @@
-"""Sources & sinks: stage checkpointing with resume, metrics sink.
+"""Sources & sinks: stage checkpointing with resume.
 
 Sandbox storage is parquet; on a production cluster the same
 CheckpointStore maps 1:1 onto Iceberg tables

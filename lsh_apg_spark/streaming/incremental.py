@@ -2,27 +2,39 @@
 insertLSHRefine src/divGraph.h:471-526, reinterpreted without shared
 mutable state — SURVEY.md §2.10).
 
+State is four checkpoint tables, each holding only what a later batch
+reads:
+
+  docs        (url)                the ledger of urls seen so far
+  signatures  (url, simhash, shingles, bhashes)
+                                   the probe index and verify input
+  edges       (a, b)               verified near-dup edges, endpoints only
+  clusters    (url, cluster_id)    the current assignment
+
+Raw pages are not retained. The bucket rows are not stored either:
+they are the explode of the stored signatures' `bhashes`, and parquet
+column pruning reads only that column back.
+
 Per batch of new pages:
 
-  1. anti-join against already-seen urls (idempotent re-delivery),
+  1. anti-join against the docs ledger (idempotent re-delivery),
      materialized once; its row count rides that same job;
   2. no new doc left (a full re-delivery): return the stored cluster
      table and write nothing;
   3. signatures for the NEW docs only, materialized once — the only
-     run of the signature UDF in the batch;
+     run of the signature UDF in the batch; with ``eval_docs``,
+     ``decontaminate()`` drops contaminated new docs here, reusing
+     those signatures;
   4. candidate pairs = new-vs-all equi-join on bucket keys (the new
      docs probe the existing 'hash table', exactly like the
      reference's per-point searchLSH probe) + new-vs-new pairs;
-  5. verify against the union text corpus, the new edges materialized
+  5. verify against the union signatures, the new edges materialized
      once (the edges write and the CC both read them);
-  6. union edges, re-run CC over the touched components, rewrite the
-     state tables.
+  6. one CC over the touched components + the new docs (every doc on
+     a cold start), then one commit of the four tables.
 
-All state lives in four checkpoint tables (docs — the pages seen so
-far — signatures, edges, clusters) — every step is a pure DataFrame
-job, so a crashed batch just re-runs. The old bucket rows are not
-stored: they are the explode of the stored signatures' `bhashes`, and
-parquet column pruning reads only that column back."""
+Every table only grows by the batch, and every step is a pure
+DataFrame job, so a crashed batch just re-runs."""
 
 from __future__ import annotations
 
@@ -32,6 +44,7 @@ from pyspark.sql import functions as F
 from lsh_apg_spark.config import DedupConfig
 from lsh_apg_spark.operators.banding import explode_buckets
 from lsh_apg_spark.operators.components import connected_components
+from lsh_apg_spark.operators.decontaminate import decontaminate
 from lsh_apg_spark.operators.pairs import candidate_pairs
 from lsh_apg_spark.operators.signatures import compute_signatures
 from lsh_apg_spark.operators.verify import verify_edges
@@ -43,14 +56,12 @@ def dedup_increment(
     new_pages: DataFrame,
     store: CheckpointStore,
     cfg: DedupConfig,
-    id_col: str = "url",
-    text_col: str = "text",
     metrics: dict | None = None,
     on_mismatch: str = "fail",
     eval_docs: DataFrame | None = None,
 ) -> DataFrame:
-    """Process one batch of new pages; returns the refreshed
-    (url, cluster_id) assignment over the whole corpus so far.
+    """Process one batch of new pages (``url``, ``text``); returns the
+    refreshed (url, cluster_id) assignment over the whole corpus so far.
 
     ``metrics``, if given, receives cc_nodes/cc_edges — the size of the
     subgraph the batch actually re-clustered (bounded by TOUCHED
@@ -60,10 +71,10 @@ def dedup_increment(
 
     ``eval_docs``: optional held-out reference set (benchmark/eval
     documents). New docs whose shingle-Jaccard with any eval doc
-    reaches cfg.tau are DROPPED at ingest (operators/decontaminate.py
-    — the signatures computed for insertion are reused, so the check
-    adds only the broadcast eval probe), and never enter the corpus
-    state: decontamination-at-ingest for a training pipeline.
+    reaches cfg.tau are DROPPED at ingest by ``decontaminate()`` (the
+    signatures computed for insertion are reused, so the check adds
+    only the broadcast eval probe), and never enter the corpus state:
+    decontamination-at-ingest for a training pipeline.
 
     A store whose sidecars were written under a DIFFERENT config or
     schema version is an ERROR by default (``on_mismatch="fail"``):
@@ -72,7 +83,7 @@ def dedup_increment(
     rebuild it — silent truncation, caught loudly instead (ADVICE r2).
     Pass ``on_mismatch="reset"`` to explicitly discard the old state
     and restart from this batch."""
-    new_docs = new_pages.select(id_col, text_col).dropDuplicates([id_col])
+    new_docs = new_pages.select("url", "text").dropDuplicates(["url"])
 
     state_status = store.status("docs")
     if state_status == "mismatch":
@@ -88,13 +99,15 @@ def dedup_increment(
         for stage in ("docs", "signatures", "edges", "clusters"):
             store.invalidate(stage)
     have_state = store.exists("docs")
+    have_clusters = have_state and store.exists("clusters")
+
+    def grown(name: str, new: DataFrame) -> DataFrame:
+        """The stored table plus this batch's rows (disjoint: the batch
+        holds only unseen urls), or just the batch on a cold start."""
+        return store.read(name).unionByName(new) if have_state else new
+
     if have_state:
-        old_docs = store.read("docs")
-        new_docs = new_docs.join(old_docs.select(id_col), id_col, "left_anti")
-        old_sigs = store.read("signatures")
-        old_edges = store.read("edges")
-    else:
-        old_docs = None
+        new_docs = new_docs.join(store.read("docs"), "url", "left_anti")
 
     # every later step reads the batch's new docs, signatures and edges
     # several times (the state writes, the CC, the metrics); each is
@@ -104,7 +117,8 @@ def dedup_increment(
     seen = Observation("new_docs")
     new_docs = new_docs.observe(seen, F.count(F.lit(1)).alias("n")) \
         .localCheckpoint(eager=True)
-    if seen.get["n"] == 0 and have_state and store.exists("clusters"):
+    n_new = seen.get["n"]
+    if n_new == 0 and have_clusters:
         # full re-delivery: every url is already in the state, so the
         # stored assignment is the answer and nothing is rewritten
         if metrics is not None:
@@ -113,113 +127,74 @@ def dedup_increment(
                 metrics["contaminated_dropped"] = 0
         return store.read("clusters")
 
-    new_sigs = compute_signatures(new_docs, cfg, id_col, text_col) \
-        .localCheckpoint(eager=True)
-
+    new_sigs = compute_signatures(new_docs, cfg).localCheckpoint(eager=True)
     if eval_docs is not None:
-        from lsh_apg_spark.operators.decontaminate import (
-            MAX_BROADCAST_ROWS, _maybe_broadcast, decontaminate_pairs,
-        )
-        flagged = decontaminate_pairs(
-            new_docs, eval_docs, cfg, id_col=id_col, text_col=text_col,
-            train_signatures=new_sigs,
-        ).select(F.col("train_id").alias(id_col)).distinct() \
-            .localCheckpoint(eager=True)
-        # measured count gates the broadcast (VERDICT r3 item 5): a
-        # batch that is mostly benchmark text flags O(|batch|) ids —
-        # above the guard the anti-joins run as shuffles instead of
-        # OOMing the driver
-        n_flagged = flagged.count()
+        new_docs = decontaminate(new_docs, eval_docs, cfg,
+                                 train_signatures=new_sigs)
+        new_sigs = new_sigs.join(new_docs.select("url"), "url", "left_semi")
         if metrics is not None:
-            metrics["contaminated_dropped"] = n_flagged
-        fl = _maybe_broadcast(flagged, n_flagged, MAX_BROADCAST_ROWS)
-        new_docs = new_docs.join(fl, id_col, "left_anti")
-        new_sigs = new_sigs.join(fl, id_col, "left_anti")
+            metrics["contaminated_dropped"] = n_new - new_docs.count()
 
-    new_buckets = explode_buckets(new_sigs, cfg, id_col)
-
+    docs = grown("docs", new_docs.select("url"))
+    sigs = grown("signatures", new_sigs)
+    new_buckets = explode_buckets(new_sigs, cfg)
     if have_state:
-        all_docs = old_docs.unionByName(new_docs)
-        all_sigs = old_sigs.unionByName(new_sigs)
         # new docs PROBE the existing bucket state (the reference's
         # per-point searchLSH insert probe, src/divGraph.h:359-469):
         # only bucket keys that a new doc lands in can mint a new pair,
         # so pair generation runs over that sliver of the bucket table,
         # not the whole corpus
         touched_keys = new_buckets.select("bhash").distinct()
-        relevant = explode_buckets(all_sigs, cfg, id_col).join(
-            touched_keys, ["bhash"], "left_semi")
-        pairs = candidate_pairs(relevant, cfg, id_col)
-        new_ids = new_docs.select(F.col(id_col).alias("a"))
-        new_ids_b = new_docs.select(F.col(id_col).alias("b"))
-        touching_new = pairs.join(new_ids, "a", "left_semi").unionByName(
-            pairs.join(new_ids_b, "b", "left_semi")).dropDuplicates(["a", "b"])
+        cands = candidate_pairs(explode_buckets(sigs, cfg).join(
+            touched_keys, ["bhash"], "left_semi"), cfg)
+        new_ids = new_docs.select("url")
+        pairs = cands.join(new_ids.withColumnRenamed("url", "a"), "a",
+                           "left_semi").unionByName(
+            cands.join(new_ids.withColumnRenamed("url", "b"), "b",
+                       "left_semi")).dropDuplicates(["a", "b"])
     else:
-        all_docs = new_docs
-        all_sigs = new_sigs
-        touching_new = candidate_pairs(new_buckets, cfg, id_col)
-
-    new_edges = verify_edges(touching_new, all_sigs, cfg, id_col) \
+        pairs = candidate_pairs(new_buckets, cfg)
+    new_edges = verify_edges(pairs, sigs, cfg).select("a", "b") \
         .localCheckpoint(eager=True)
-    edges = (old_edges.unionByName(new_edges).dropDuplicates(["a", "b"])
-             if have_state else new_edges)
+    edges = grown("edges", new_edges)
 
     # incremental CC (VERDICT r1 item 8): a new edge can only change
     # the components it touches, so the batch re-clusters ONLY the
     # union of (old components containing a new-edge endpoint) and the
     # new docs — everything else keeps its previous label verbatim.
-    # The subgraph's old edges are recovered by one endpoint semi-join
-    # (both endpoints of an old edge sit in the same old component, so
-    # membership of `a` implies membership of the whole edge).
-    if have_state and store.exists("clusters"):
+    # The subgraph's edges are recovered by one endpoint semi-join
+    # (both endpoints of an edge sit in the same component, so
+    # membership of `a` implies membership of the whole edge). With no
+    # stored cluster table every doc is re-clustered.
+    untouched, affected, sub_edges = None, docs, edges
+    if have_clusters:
         old_clusters = store.read("clusters")
-        ne = new_edges.select("a", "b")
-        touched_nodes = (
-            ne.select(F.col("a").alias(id_col))
-            .unionByName(ne.select(F.col("b").alias(id_col)))
-            .distinct()
-        )
-        touched_cids = (
-            old_clusters.join(touched_nodes, id_col, "left_semi")
-            .select("cluster_id").distinct()
-        )
+        touched_cids = old_clusters.join(
+            new_edges.select(F.col("a").alias("url"))
+            .unionByName(new_edges.select(F.col("b").alias("url"))),
+            "url", "left_semi").select("cluster_id").distinct()
         untouched = old_clusters.join(touched_cids, "cluster_id", "left_anti")
+        # old members and unseen urls: disjoint, like `docs`
         affected = (
             old_clusters.join(touched_cids, "cluster_id", "left_semi")
-            .select(id_col)
-            .unionByName(new_docs.select(id_col))
-            .distinct()
+            .select("url")
+            .unionByName(new_docs.select("url"))
         )
-        sub_edges = (
-            old_edges.select("a", "b")
-            .join(affected.select(F.col(id_col).alias("a")), "a", "left_semi")
-            .unionByName(ne)
-        )
-        if metrics is not None:
-            metrics["cc_nodes"] = affected.count()
-            metrics["cc_edges"] = sub_edges.count()
-        sub_clusters = connected_components(
-            sub_edges, nodes=affected, id_col=id_col)
-        clusters = untouched.unionByName(sub_clusters)
-    else:
-        if metrics is not None:
-            metrics["cc_nodes"] = all_docs.count()
-            metrics["cc_edges"] = edges.count()
-        clusters = connected_components(
-            edges.select("a", "b"), nodes=all_docs.select(id_col),
-            id_col=id_col)
+        sub_edges = edges.join(affected.withColumnRenamed("url", "a"), "a",
+                               "left_semi")
+    if metrics is not None:
+        metrics["cc_nodes"] = affected.count()
+        metrics["cc_edges"] = sub_edges.count()
+    clusters = connected_components(sub_edges, nodes=affected)
+    if untouched is not None:
+        clusters = untouched.unionByName(clusters)
 
     # persist refreshed state: two-phase write_many, because every one
     # of these plans still lazily READS the previous checkpoints —
     # swapping paths one at a time would pull files out from under the
     # later writes (see CheckpointStore.write_many)
-    out = store.write_many({
-        "docs": all_docs,
-        "signatures": all_sigs,
-        "edges": edges,
-        "clusters": clusters,
-    })
-    return out["clusters"]
+    return store.write_many({"docs": docs, "signatures": sigs,
+                             "edges": edges, "clusters": clusters})["clusters"]
 
 
 def stream_dedup(

@@ -9,7 +9,7 @@ Package + launch:
         scripts/submit_dedup.py \
         --input  /path/to/pages_parquet   # or --synthesize N
         --output /path/to/clusters_out \
-        --checkpoint-dir /path/to/ckpt --metrics /path/to/metrics.jsonl
+        --checkpoint-dir /path/to/ckpt
 
 Master/executor sizing comes entirely from spark-submit (this script
 never sets a master), so the SAME artifact runs at N and 4N executors
@@ -35,7 +35,6 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--output", required=True, help="output dir for "
                    "(url, cluster_id) parquet")
     p.add_argument("--checkpoint-dir", default=None)
-    p.add_argument("--metrics", default=None, help="metrics JSONL path")
     p.add_argument("--no-substring", action="store_true",
                    help="skip the winnowing substring pass")
     p.add_argument("--seed", type=int, default=42)
@@ -70,7 +69,6 @@ def main(argv: list[str] | None = None) -> None:
     result = run_dedup(
         spark, pages, cfg,
         checkpoint_dir=args.checkpoint_dir,
-        metrics_path=args.metrics,
         include_substring=not args.no_substring,
     )
     result.clusters.write.mode("overwrite").parquet(args.output)

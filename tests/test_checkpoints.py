@@ -84,3 +84,24 @@ def test_pipeline_resume_rejects_changed_input(spark, tmp_path):
     r3 = run_dedup(spark, big, CFG, checkpoint_dir=ckpt,
                    include_substring=False)
     assert all(m["resumed"] for m in r3.metrics if "resumed" in m)
+
+
+def test_pipeline_resume_keeps_substring_setting_apart(spark, tmp_path):
+    """A cluster table built with substring edges never resumes into a
+    run without them, nor the other way round: each run on a shared
+    checkpoint_dir matches a run with no store."""
+    fx = generate_pages(n_docs=200, seed=5)
+    pages = spark.createDataFrame(fx.pages, schema=PAGES_SCHEMA) \
+        .localCheckpoint(eager=True)
+
+    def assignment(**kw):
+        clusters = run_dedup(spark, pages, CFG, **kw).clusters
+        return sorted((r["url"], r["cluster_id"]) for r in clusters.collect())
+
+    ref = {sub: assignment(include_substring=sub) for sub in (False, True)}
+    assert ref[False] != ref[True]
+    for order in ((False, True), (True, False)):
+        ckpt = str(tmp_path / "ckpt_{}_{}".format(*order))
+        for sub in order:
+            got = assignment(checkpoint_dir=ckpt, include_substring=sub)
+            assert got == ref[sub], f"order {order}, include_substring={sub}"

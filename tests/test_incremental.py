@@ -39,6 +39,9 @@ def test_incremental_equals_batch(spark, corpus, tmp_path):
     # bucket rows are re-derived from the stored signatures, never stored
     assert sorted(p.name for p in (tmp_path / "inc").iterdir()
                   if p.is_dir()) == ["clusters", "docs", "edges", "signatures"]
+    # docs is a url ledger and edges hold endpoints only
+    assert store.read("docs").columns == ["url"]
+    assert store.read("edges").columns == ["a", "b"]
 
 
 def test_incremental_redelivery_idempotent(spark, corpus, tmp_path):
@@ -82,6 +85,26 @@ def test_incremental_mixed_batch_equals_batch(spark, corpus, tmp_path):
     batch = run_dedup(spark, corpus, CFG, include_substring=False).clusters
     assert _assignments(final) == _assignments(batch)
     assert store.lineage("docs")["rows"] == len(urls)
+    # the stored edges and the batch's new edges are disjoint
+    edges = store.read("edges")
+    assert edges.count() == edges.distinct().count()
+
+
+def test_incremental_without_cluster_table_equals_batch(spark, corpus,
+                                                         tmp_path):
+    """A store whose cluster table is missing re-clusters every doc
+    and edge on the next batch and still lands on the one-shot
+    assignment."""
+    store = CheckpointStore(spark, str(tmp_path / "inc_nocl"), CFG)
+    half1 = corpus.limit(60)
+    dedup_increment(spark, half1, store, CFG)
+    store.invalidate("clusters")
+    metrics: dict = {}
+    final = dedup_increment(spark, corpus.subtract(half1), store, CFG,
+                            metrics=metrics)
+    batch = run_dedup(spark, corpus, CFG, include_substring=False).clusters
+    assert _assignments(final) == _assignments(batch)
+    assert metrics["cc_nodes"] == corpus.count()
 
 
 def test_incremental_batch_fully_decontaminated(spark, tmp_path):

@@ -37,7 +37,6 @@ def test_spark_submit_py_files_roundtrip(tmp_path):
             zf.write(py, py.relative_to(REPO))
 
     out_dir = tmp_path / "clusters"
-    metrics = tmp_path / "metrics.jsonl"
     proc = subprocess.run(
         [submit, "--master", "local[4]",
          "--conf", "spark.sql.shuffle.partitions=8",
@@ -45,7 +44,7 @@ def test_spark_submit_py_files_roundtrip(tmp_path):
          "--py-files", str(pkg_zip),
          str(REPO / "scripts" / "submit_dedup.py"),
          "--synthesize", "80", "--output", str(out_dir),
-         "--metrics", str(metrics), "--no-substring"],
+         "--no-substring"],
         capture_output=True, text=True, timeout=600,
         cwd=str(tmp_path),  # NOT the repo root: the zip must suffice
     )
@@ -53,7 +52,9 @@ def test_spark_submit_py_files_roundtrip(tmp_path):
     report = json.loads(proc.stdout.strip().splitlines()[-1])
     assert report["docs"] == 80
     assert 0 < report["clusters"] <= 80
-    assert metrics.exists()
+    stages = [m for m in report["stages"] if m["stage"] != "bucket_stats"]
+    assert stages and all(
+        isinstance(m["rows"], int) and "wall_sec" in m for m in stages)
 
     # the output parquet is readable and complete
     import duckdb
