@@ -28,7 +28,7 @@ class DedupConfig:
     num_probes: int = 2            # extra leave-one-row-out probe keys per band
     # --- verification (maps exact re-rank, basis.h:186-202)
     tau: float = 0.8               # exact word-shingle Jaccard threshold
-    # --- SimHash (secondary fingerprint; the kernel is fixed at 64 bits)
+    # --- SimHash near-dup query (operators/dedup.simhash_neardup_pairs, 64 bits)
     hamming_max: int = 3
     # --- substring pass (winnowing)
     min_substring_len: int = 200   # chars; guarantee t = window + kgram - 1
@@ -70,11 +70,13 @@ class DedupConfig:
     # differently. v4: signatures dropped the unread `minhash` column
     # and the incremental store no longer keeps a `buckets` table.
     # v5: the incremental store keeps `docs` as a url ledger and
-    # `edges` as endpoints only (a, b).
+    # `edges` as endpoints only (a, b). v6: signatures dropped the
+    # unread `simhash` column, and the incremental store keeps no
+    # `edges` table (docs, signatures, clusters only).
     # NB: the incremental store FAILS LOUDLY on a version mismatch
     # instead of silently restarting state (streaming/incremental.py,
     # ADVICE r2).
-    SCHEMA_VERSION = 5
+    SCHEMA_VERSION = 6
 
     def config_id(self) -> str:
         """Stable identity string stored beside every checkpoint."""

@@ -225,15 +225,6 @@ def band_probe_keys(minhash: np.ndarray, bands: int, rows_per_band: int,
     return out.view(np.int64)
 
 
-def simhash64(shingles: np.ndarray) -> int:
-    """64-bit SimHash over the shingle hash set: bit j of the result is
-    the majority vote of bit j across shingle hashes. Returns int64."""
-    bits = np.unpackbits(shingles.view(np.uint8).reshape(len(shingles), 8), axis=1)
-    votes = bits.sum(axis=0, dtype=np.int64) * 2 >= len(shingles)
-    packed = np.packbits(votes.astype(np.uint8))
-    return int(np.frombuffer(packed.tobytes(), dtype=np.uint64)[0].view(np.int64))
-
-
 def exact_jaccard(text_a: str, text_b: str, k: int,
                   cache: dict[str, np.uint64] | None = None) -> float:
     """Exact word-shingle Jaccard — the verification kernel (maps the
@@ -246,11 +237,6 @@ def exact_jaccard(text_a: str, text_b: str, k: int,
     inter = np.intersect1d(sa, sb, assume_unique=True).size
     union = sa.size + sb.size - inter
     return float(inter) / float(union) if union else 1.0
-
-
-def hamming64(x: int, y: int) -> int:
-    """Hamming distance between two 64-bit SimHash fingerprints."""
-    return int(bin((x ^ y) & 0xFFFFFFFFFFFFFFFF).count("1"))
 
 
 # ---------------------------------------------------------------------------

@@ -1,10 +1,10 @@
 """Stage 1 — per-document signatures (maps P1-P3 of SURVEY.md §2.2:
 hashBase::setHash/calHash/getHash, reference src/e2lsh.cpp:40-91).
 
-Narrow map stage: one Arrow-batched pandas UDF computes MinHash +
-SimHash per document (the MinHash values are folded into bucket keys
-inside the UDF and never leave it); no shuffle is introduced here, so at 100 TB this
-stage scales linearly with input splits."""
+Narrow map stage: one Arrow-batched pandas UDF computes the shingle set
+and MinHash per document (the MinHash values are folded into bucket
+keys inside the UDF and never leave it); no shuffle is introduced here,
+so at 100 TB this stage scales linearly with input splits."""
 
 from __future__ import annotations
 
@@ -21,8 +21,7 @@ def compute_signatures(
     id_col: str = "url",
     text_col: str = "text",
 ) -> DataFrame:
-    """(id, text, ...) -> (id, simhash BIGINT, shingles ARRAY<BIGINT>,
-    bhashes ARRAY<BIGINT>).
+    """(id, text, ...) -> (id, shingles ARRAY<BIGINT>, bhashes ARRAY<BIGINT>).
 
     ``shingles`` (the distinct shingle-hash set) rides along so the
     verify stage is a JVM-only array_intersect — the text column never
@@ -38,7 +37,6 @@ def compute_signatures(
         .withColumn("_sig", sig(F.col(text_col)))
         .select(
             F.col(id_col),
-            F.col("_sig.simhash").alias("simhash"),
             F.col("_sig.shingles").alias("shingles"),
             F.col("_sig.bhashes").alias("bhashes"),
         )

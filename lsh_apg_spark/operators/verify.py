@@ -5,12 +5,11 @@ F2/F3, src/divGraph.h:544,1118).
 
 Entirely JVM-side: the signature stage already materialized each
 document's distinct shingle-hash set (ARRAY<BIGINT>), so exact Jaccard
-is `array_intersect`/`size` inside whole-stage codegen and SimHash
-Hamming is `bit_count(xor)` — no Python anywhere in the verify path.
-The pair rows join the (slim) signatures table twice; the cheap columns
-(sizes, simhash) and the exact intersection are evaluated after the
-join with no UDF boundary, so Catalyst is free to reorder and pipeline
-the whole stage."""
+is `array_intersect`/`size` inside whole-stage codegen — no Python
+anywhere in the verify path. The pair rows join the (slim) signatures
+table twice; the set sizes and the exact intersection are evaluated
+after the join with no UDF boundary, so Catalyst is free to reorder and
+pipeline the whole stage."""
 
 from __future__ import annotations
 
@@ -18,27 +17,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lsh_apg_spark.config import DedupConfig
-from lsh_apg_spark.functions.hashing import simhash_hamming
 
 
 def verify_edges(pairs: DataFrame, signatures: DataFrame, cfg: DedupConfig,
                  id_col: str = "url") -> DataFrame:
-    """(a, b) + signatures(id, simhash, shingles) -> verified edges
-    (a, b, jaccard, hamming) with exact shingle-set Jaccard >= tau.
+    """(a, b) + signatures(id, shingles) -> verified edges
+    (a, b, jaccard) with exact shingle-set Jaccard >= tau.
 
     The exact Jaccard (never the MinHash estimate) decides every edge,
     mirroring the reference's exact re-rank of every surviving
     candidate (src/e2lsh.cpp:170)."""
-    sig_a = signatures.select(
-        F.col(id_col).alias("a"),
-        F.col("shingles").alias("_sa"),
-        F.col("simhash").alias("_ha"),
-    )
-    sig_b = signatures.select(
-        F.col(id_col).alias("b"),
-        F.col("shingles").alias("_sb"),
-        F.col("simhash").alias("_hb"),
-    )
+    sig_a = signatures.select(F.col(id_col).alias("a"),
+                              F.col("shingles").alias("_sa"))
+    sig_b = signatures.select(F.col(id_col).alias("b"),
+                              F.col("shingles").alias("_sb"))
     inter = F.size(F.array_intersect("_sa", "_sb"))
     return (
         pairs.join(sig_a, "a").join(sig_b, "b")
@@ -47,6 +39,5 @@ def verify_edges(pairs: DataFrame, signatures: DataFrame, cfg: DedupConfig,
             "jaccard",
             F.col("_i") / (F.size("_sa") + F.size("_sb") - F.col("_i")))
         .filter(F.col("jaccard") >= cfg.tau)
-        .withColumn("hamming", simhash_hamming("_ha", "_hb"))
-        .select("a", "b", "jaccard", "hamming")
+        .select("a", "b", "jaccard")
     )

@@ -38,10 +38,18 @@ from lsh_apg_spark.sources.checkpoints import CheckpointStore
 class DedupResult:
     signatures: DataFrame
     pairs: DataFrame
-    edges: DataFrame          # (a, b, jaccard, hamming) — representative docs
+    edges: DataFrame          # (a, b, jaccard) — representative docs
     substring: DataFrame | None  # (a, b, lcs_len) or None
     clusters: DataFrame       # (url, cluster_id) — every input url
     metrics: list[dict]
+
+
+def one_text_per_url(pages: DataFrame) -> DataFrame:
+    """(url, text) with one row per url. A url given several rows keeps
+    the one with the smallest md5(text), so the choice depends on the
+    rows alone, not on their order or partitioning."""
+    return pages.groupBy("url").agg(
+        F.min_by("text", F.md5(F.col("text").cast("binary"))).alias("text"))
 
 
 def run_dedup(
@@ -71,7 +79,12 @@ def run_dedup(
         metrics.append({"stage": name, **row})
         return df
 
-    all_docs = pages.select("url", "text")
+    # the url shuffle gets an explicit partition count, which AQE does
+    # not coalesce: it would fold a small corpus into one task, and the
+    # signature and substring UDFs downstream would run on one core.
+    # The groupBy in one_text_per_url reuses this partitioning.
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    all_docs = one_text_per_url(pages.repartition(n, "url"))
     keyed = all_docs.select(
         F.col("url"), F.md5(F.col("text").cast("binary")).alias("_k"))
 

@@ -2,23 +2,25 @@
 insertLSHRefine src/divGraph.h:471-526, reinterpreted without shared
 mutable state — SURVEY.md §2.10).
 
-State is four checkpoint tables, each holding only what a later batch
+State is three checkpoint tables, each holding only what a later batch
 reads:
 
-  docs        (url)                the ledger of urls seen so far
-  signatures  (url, simhash, shingles, bhashes)
-                                   the probe index and verify input
-  edges       (a, b)               verified near-dup edges, endpoints only
-  clusters    (url, cluster_id)    the current assignment
+  docs        (url)                       the ledger of urls seen so far
+  signatures  (url, shingles, bhashes)    the probe index and verify input
+  clusters    (url, cluster_id)           the current assignment
 
 Raw pages are not retained. The bucket rows are not stored either:
 they are the explode of the stored signatures' `bhashes`, and parquet
-column pruning reads only that column back.
+column pruning reads only that column back. Nor are the verified
+edges: edges are only ever added, so the stored clusters already hold
+everything a later batch needs from them, and a store without
+clusters recomputes them from the stored signatures.
 
 Per batch of new pages:
 
-  1. anti-join against the docs ledger (idempotent re-delivery),
-     materialized once; its row count rides that same job;
+  1. one row per url (pipeline.one_text_per_url), then an anti-join
+     against the docs ledger (idempotent re-delivery), materialized
+     once; its row count rides that same job;
   2. no new doc left (a full re-delivery): return the stored cluster
      table and write nothing;
   3. signatures for the NEW docs only, materialized once — the only
@@ -28,10 +30,14 @@ Per batch of new pages:
   4. candidate pairs = new-vs-all equi-join on bucket keys (the new
      docs probe the existing 'hash table', exactly like the
      reference's per-point searchLSH probe) + new-vs-new pairs;
-  5. verify against the union signatures, the new edges materialized
-     once (the edges write and the CC both read them);
-  6. one CC over the touched components + the new docs (every doc on
-     a cold start), then one commit of the four tables.
+  5. verify against the union signatures;
+  6. one CC over the stored components contracted to their ids: each
+     new edge's endpoints map to their stored cluster_id (a new doc to
+     itself), the contracted edges are materialized once, the new docs
+     are the nodes, and the stored rows take the label of their old
+     id. A store without clusters (a cold start, or the recovery path)
+     instead pairs and verifies every stored signature and runs the CC
+     over every doc. Then one commit of the three tables.
 
 Every table only grows by the batch, and every step is a pure
 DataFrame job, so a crashed batch just re-runs."""
@@ -48,6 +54,7 @@ from lsh_apg_spark.operators.decontaminate import decontaminate
 from lsh_apg_spark.operators.pairs import candidate_pairs
 from lsh_apg_spark.operators.signatures import compute_signatures
 from lsh_apg_spark.operators.verify import verify_edges
+from lsh_apg_spark.pipeline import one_text_per_url
 from lsh_apg_spark.sources.checkpoints import CheckpointStore
 
 
@@ -63,9 +70,15 @@ def dedup_increment(
     """Process one batch of new pages (``url``, ``text``); returns the
     refreshed (url, cluster_id) assignment over the whole corpus so far.
 
+    A url given several rows keeps the one with the smallest
+    ``md5(text)``, as in ``run_dedup``. A url that an earlier batch
+    already ingested keeps its first text: a later text under it is
+    ignored.
+
     ``metrics``, if given, receives cc_nodes/cc_edges — the size of the
-    subgraph the batch actually re-clustered (bounded by TOUCHED
-    components + the new docs, not the accumulated corpus) — plus
+    graph the batch actually clustered: on a warm batch the new docs
+    plus the stored cluster ids its new edges touch, and those edges
+    contracted to the ids (not the accumulated corpus) — plus
     contaminated_dropped when ``eval_docs`` is set. All are 0 for a
     batch with no new url, which writes nothing.
 
@@ -83,7 +96,7 @@ def dedup_increment(
     rebuild it — silent truncation, caught loudly instead (ADVICE r2).
     Pass ``on_mismatch="reset"`` to explicitly discard the old state
     and restart from this batch."""
-    new_docs = new_pages.select("url", "text").dropDuplicates(["url"])
+    new_docs = one_text_per_url(new_pages)
 
     state_status = store.status("docs")
     if state_status == "mismatch":
@@ -96,7 +109,7 @@ def dedup_increment(
                 "Re-run with the original config, or pass "
                 "on_mismatch='reset' to intentionally restart state from "
                 "this batch.")
-        for stage in ("docs", "signatures", "edges", "clusters"):
+        for stage in ("docs", "signatures", "clusters"):
             store.invalidate(stage)
     have_state = store.exists("docs")
     have_clusters = have_state and store.exists("clusters")
@@ -109,11 +122,10 @@ def dedup_increment(
     if have_state:
         new_docs = new_docs.join(store.read("docs"), "url", "left_anti")
 
-    # every later step reads the batch's new docs, signatures and edges
-    # several times (the state writes, the CC, the metrics); each is
-    # materialized once, so no write re-runs the anti-join, the
-    # signature UDF or the pair/verify pipeline. The new-doc count
-    # rides the materializing job.
+    # every later step reads the batch's new docs and signatures several
+    # times (the state writes, the CC, the metrics); each is
+    # materialized once, so no write re-runs the anti-join or the
+    # signature UDF. The new-doc count rides the materializing job.
     seen = Observation("new_docs")
     new_docs = new_docs.observe(seen, F.count(F.lit(1)).alias("n")) \
         .localCheckpoint(eager=True)
@@ -135,66 +147,78 @@ def dedup_increment(
         if metrics is not None:
             metrics["contaminated_dropped"] = n_new - new_docs.count()
 
-    docs = grown("docs", new_docs.select("url"))
+    new_ids = new_docs.select("url")
+    docs = grown("docs", new_ids)
     sigs = grown("signatures", new_sigs)
-    new_buckets = explode_buckets(new_sigs, cfg)
-    if have_state:
-        # new docs PROBE the existing bucket state (the reference's
-        # per-point searchLSH insert probe, src/divGraph.h:359-469):
-        # only bucket keys that a new doc lands in can mint a new pair,
-        # so pair generation runs over that sliver of the bucket table,
-        # not the whole corpus
-        touched_keys = new_buckets.select("bhash").distinct()
+    if have_clusters:
+        # warm batch: new docs PROBE the existing bucket state (the
+        # reference's per-point searchLSH insert probe,
+        # src/divGraph.h:359-469): only bucket keys that a new doc
+        # lands in can mint a new pair, so pair generation runs over
+        # that sliver of the bucket table, and keeps the pairs with a
+        # new endpoint
+        touched_keys = explode_buckets(new_sigs, cfg).select("bhash") \
+            .distinct()
         cands = candidate_pairs(explode_buckets(sigs, cfg).join(
             touched_keys, ["bhash"], "left_semi"), cfg)
-        new_ids = new_docs.select("url")
         pairs = cands.join(new_ids.withColumnRenamed("url", "a"), "a",
                            "left_semi").unionByName(
             cands.join(new_ids.withColumnRenamed("url", "b"), "b",
                        "left_semi")).dropDuplicates(["a", "b"])
     else:
-        pairs = candidate_pairs(new_buckets, cfg)
-    new_edges = verify_edges(pairs, sigs, cfg).select("a", "b") \
-        .localCheckpoint(eager=True)
-    edges = grown("edges", new_edges)
+        pairs = candidate_pairs(explode_buckets(sigs, cfg), cfg)
+    edges = verify_edges(pairs, sigs, cfg).select("a", "b")
 
-    # incremental CC (VERDICT r1 item 8): a new edge can only change
-    # the components it touches, so the batch re-clusters ONLY the
-    # union of (old components containing a new-edge endpoint) and the
-    # new docs — everything else keeps its previous label verbatim.
-    # The subgraph's edges are recovered by one endpoint semi-join
-    # (both endpoints of an edge sit in the same component, so
-    # membership of `a` implies membership of the whole edge). With no
-    # stored cluster table every doc is re-clustered.
-    untouched, affected, sub_edges = None, docs, edges
+    # incremental CC over the contracted graph: edges are only ever
+    # added, so the components after this batch are the stored ones
+    # merged by the new edges. Each endpoint maps to its stored
+    # cluster_id, a new doc to itself; every new edge has a new
+    # endpoint, so no contracted edge is a self-loop. A stored id is
+    # its component's min url and new urls are unseen, so min-label
+    # still gives cluster_id = min member url.
+    nodes = docs
     if have_clusters:
-        old_clusters = store.read("clusters")
-        touched_cids = old_clusters.join(
-            new_edges.select(F.col("a").alias("url"))
-            .unionByName(new_edges.select(F.col("b").alias("url"))),
-            "url", "left_semi").select("cluster_id").distinct()
-        untouched = old_clusters.join(touched_cids, "cluster_id", "left_anti")
-        # old members and unseen urls: disjoint, like `docs`
-        affected = (
-            old_clusters.join(touched_cids, "cluster_id", "left_semi")
-            .select("url")
-            .unionByName(new_docs.select("url"))
+        stored = store.read("clusters")
+
+        def stored_id(end: str) -> DataFrame:
+            return stored.select(F.col("url").alias(end),
+                                 F.col("cluster_id").alias(f"_{end}"))
+
+        edges = (
+            edges.join(stored_id("a"), "a", "left")
+            .join(stored_id("b"), "b", "left")
+            .select(F.coalesce("_a", "a").alias("a"),
+                    F.coalesce("_b", "b").alias("b"))
         )
-        sub_edges = edges.join(affected.withColumnRenamed("url", "a"), "a",
-                               "left_semi")
+        nodes = new_ids
+    # materialized once, so the batch's pair and verify work runs here
+    # and not inside the CC; the edge count rides the same job
+    graph = Observation("cc_edges")
+    edges = edges.observe(graph, F.count(F.lit(1)).alias("n")) \
+        .localCheckpoint(eager=True)
+    labels = connected_components(edges, nodes=nodes)
     if metrics is not None:
-        metrics["cc_nodes"] = affected.count()
-        metrics["cc_edges"] = sub_edges.count()
-    clusters = connected_components(sub_edges, nodes=affected)
-    if untouched is not None:
-        clusters = untouched.unionByName(clusters)
+        metrics["cc_nodes"] = labels.count()
+        metrics["cc_edges"] = graph.get["n"]
+    clusters = labels
+    if have_clusters:
+        # a stored row takes its old id's new label (the CC output is
+        # the small contracted graph, so it broadcasts); the new docs'
+        # rows come straight from the CC
+        remap = labels.select(F.col("url").alias("cluster_id"),
+                              F.col("cluster_id").alias("_to"))
+        clusters = (
+            stored.join(F.broadcast(remap), "cluster_id", "left")
+            .select("url", F.coalesce("_to", "cluster_id").alias("cluster_id"))
+            .unionByName(labels.join(new_ids, "url", "left_semi"))
+        )
 
     # persist refreshed state: two-phase write_many, because every one
     # of these plans still lazily READS the previous checkpoints —
     # swapping paths one at a time would pull files out from under the
     # later writes (see CheckpointStore.write_many)
     return store.write_many({"docs": docs, "signatures": sigs,
-                             "edges": edges, "clusters": clusters})["clusters"]
+                             "clusters": clusters})["clusters"]
 
 
 def stream_dedup(

@@ -56,7 +56,7 @@ def test_decontaminate_reuses_prior_signatures(spark):
     train, evals = _corpus(spark)
     cfg = DedupConfig()
     sigs = compute_signatures(train, cfg).localCheckpoint(eager=True)
-    assert sigs.columns == ["url", "simhash", "shingles", "bhashes"]
+    assert sigs.columns == ["url", "shingles", "bhashes"]
     via_sigs = decontaminate_pairs(train, evals, cfg,
                                    train_signatures=sigs)
     direct = decontaminate_pairs(train, evals, cfg)

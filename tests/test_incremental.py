@@ -5,6 +5,8 @@ batch run, and re-delivery must be idempotent."""
 
 from __future__ import annotations
 
+import hashlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -33,23 +35,30 @@ def test_incremental_equals_batch(spark, corpus, tmp_path):
     store = CheckpointStore(spark, str(tmp_path / "inc"), CFG)
     half1 = corpus.limit(60)
     half2 = corpus.subtract(half1)
-    dedup_increment(spark, half1, store, CFG)
+    cold = dedup_increment(spark, half1, store, CFG)
     final = dedup_increment(spark, half2, store, CFG)
     assert _assignments(final) == _assignments(batch)
-    # bucket rows are re-derived from the stored signatures, never stored
+    # cold and warm batches return and store the run_dedup column order
+    for df in (batch, cold, final, store.read("clusters")):
+        assert df.columns == ["url", "cluster_id"]
+    # bucket rows are re-derived from the stored signatures, and edges
+    # from the stored clusters: neither is stored
     assert sorted(p.name for p in (tmp_path / "inc").iterdir()
-                  if p.is_dir()) == ["clusters", "docs", "edges", "signatures"]
-    # docs is a url ledger and edges hold endpoints only
+                  if p.is_dir()) == ["clusters", "docs", "signatures"]
+    # docs is a url ledger
     assert store.read("docs").columns == ["url"]
-    assert store.read("edges").columns == ["a", "b"]
 
 
 def test_incremental_redelivery_idempotent(spark, corpus, tmp_path):
     store = CheckpointStore(spark, str(tmp_path / "inc2"), CFG)
-    first = dedup_increment(spark, corpus, store, CFG)
+    half1 = corpus.limit(60)
+    dedup_increment(spark, half1, store, CFG)
+    first = dedup_increment(spark, corpus, store, CFG)  # warm batch
     a1 = _assignments(first)
     again = dedup_increment(spark, corpus, store, CFG)  # full re-delivery
     assert _assignments(again) == a1
+    for df in (first, again, store.read("clusters")):
+        assert df.columns == ["url", "cluster_id"]
 
 
 def _state_files(root):
@@ -85,9 +94,6 @@ def test_incremental_mixed_batch_equals_batch(spark, corpus, tmp_path):
     batch = run_dedup(spark, corpus, CFG, include_substring=False).clusters
     assert _assignments(final) == _assignments(batch)
     assert store.lineage("docs")["rows"] == len(urls)
-    # the stored edges and the batch's new edges are disjoint
-    edges = store.read("edges")
-    assert edges.count() == edges.distinct().count()
 
 
 def test_incremental_without_cluster_table_equals_batch(spark, corpus,
@@ -127,10 +133,90 @@ def test_incremental_batch_fully_decontaminated(spark, tmp_path):
     assert _assignments(out) == [("p_clean1", "p_clean1"),
                                  ("p_clean2", "p_clean2")]
     assert metrics["contaminated_dropped"] == 1
-    for name in ("docs", "signatures", "edges", "clusters"):
+    for name in ("docs", "signatures", "clusters"):
         assert store.status(name) == "ok", name
     assert store.lineage("docs")["rows"] == 2
     assert _assignments(store.read("clusters")) == _assignments(out)
+
+
+def _words(lo, hi):
+    return " ".join(f"w{i}" for i in range(lo, hi))
+
+
+def test_incremental_contracts_stored_components(spark, tmp_path):
+    """A warm batch clusters the stored components contracted to their
+    ids. Stored: exact-dup pairs of text A (words 0-99) and of text C
+    (words 16-115), two clusters (A-C Jaccard ~0.72). New doc B (words
+    8-107, ~0.85 to both) merges them: the CC runs over 3 nodes (both
+    stored ids and B; re-clustering the touched components took 5),
+    and B's url, the new min, labels every stored row as run_dedup
+    does."""
+    a, b, c = _words(0, 100), _words(8, 108), _words(16, 116)
+    stored = [("p1_a", a), ("p2_a", a), ("p3_c", c), ("p4_c", c)]
+    schema = "url string, text string"
+    store = CheckpointStore(spark, str(tmp_path / "inc_contract"), CFG)
+    first = dedup_increment(spark, spark.createDataFrame(stored, schema),
+                            store, CFG)
+    assert _assignments(first) == [("p1_a", "p1_a"), ("p2_a", "p1_a"),
+                                   ("p3_c", "p3_c"), ("p4_c", "p3_c")]
+    metrics: dict = {}
+    final = dedup_increment(spark, spark.createDataFrame([("p0_b", b)], schema),
+                            store, CFG, metrics=metrics)
+    batch = run_dedup(spark, spark.createDataFrame(stored + [("p0_b", b)], schema),
+                      CFG, include_substring=False).clusters
+    assert _assignments(final) == _assignments(batch)
+    assert {cid for _, cid in _assignments(final)} == {"p0_b"}
+    assert metrics["cc_nodes"] == 3
+
+
+def _md5(text):
+    return hashlib.md5(text.encode()).hexdigest()
+
+
+@pytest.mark.parametrize("second", ["same_text", "other_text"])
+def test_repeated_url_keeps_smallest_md5_text(spark, tmp_path, second):
+    """A url given several rows keeps the one with the smallest
+    md5(text), in both entry points: one row per url, equal to the
+    result of the url-deduplicated input. Texts A and B share no
+    shingle, so a second text under u1 must not merge u2 and u3."""
+    a, b = _words(0, 60), _words(100, 160)
+    rows = [("u1", a), ("u1", a if second == "same_text" else b),
+            ("u2", b), ("u3", a)]
+    keep: dict = {}
+    for url, text in rows:
+        if url not in keep or _md5(text) < _md5(keep[url]):
+            keep[url] = text
+    schema = "url string, text string"
+    expected = _assignments(run_dedup(
+        spark, spark.createDataFrame(sorted(keep.items()), schema), CFG,
+        include_substring=False).clusters)
+    assert [u for u, _ in expected] == ["u1", "u2", "u3"]
+    pages = spark.createDataFrame(rows, schema)
+    got = run_dedup(spark, pages, CFG, include_substring=False).clusters
+    assert _assignments(got) == expected
+    store = CheckpointStore(spark, str(tmp_path / "inc_dup_url"), CFG)
+    assert _assignments(dedup_increment(spark, pages, store, CFG)) == expected
+
+
+def test_incremental_warm_batch_job_count(spark, corpus, tmp_path):
+    """Job-count guard: for a fixed input and config the number of
+    Spark jobs is stable, so host noise cannot hide a regression that
+    a wall-time check would miss. One warm fresh batch (60 + 60 docs
+    of the fixture) runs 31 jobs; re-clustering the touched
+    components from a stored edge table ran 41."""
+    store = CheckpointStore(spark, str(tmp_path / "inc_jobs"), CFG)
+    half1 = corpus.limit(60)
+    half2 = corpus.subtract(half1)
+    dedup_increment(spark, half1, store, CFG)
+    sc = spark.sparkContext
+    group = "test_incremental_warm_batch_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        dedup_increment(spark, half2, store, CFG)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= 34, jobs
 
 
 def test_incremental_cc_bounded_by_touched_components(spark, tmp_path):

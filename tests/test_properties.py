@@ -61,17 +61,6 @@ def test_shingle_hashes_sorted_distinct_nonempty(text: str, k: int) -> None:
 
 
 @_FAST
-@given(st.integers(min_value=0, max_value=2**64 - 1),
-       st.integers(min_value=0, max_value=2**64 - 1))
-def test_hamming64_metric_properties(x: int, y: int) -> None:
-    d = kernels.hamming64(x, y)
-    assert 0 <= d <= 64
-    assert d == kernels.hamming64(y, x)
-    assert kernels.hamming64(x, x) == 0
-    assert d == bin(x ^ y).count("1")
-
-
-@_FAST
 @given(st.data())
 def test_band_key_collision_iff_band_agrees(data) -> None:
     """Two signatures share band b's base key iff the band's rows all
