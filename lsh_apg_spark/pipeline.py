@@ -72,9 +72,12 @@ def run_dedup(
             row = {"rows": rows, "resumed": resumed,
                    "wall_sec": round(time.monotonic() - t0, 3)}
         else:
-            # truncate lineage between shuffle-heavy stages
-            df = builder().localCheckpoint(eager=True)
-            row = {"rows": df.count(), "resumed": False,
+            # truncate lineage between shuffle-heavy stages; the row
+            # count rides the checkpoint job instead of a count() job
+            seen = Observation(f"rows_{name}")
+            df = builder().observe(seen, F.count(F.lit(1)).alias("n")) \
+                .localCheckpoint(eager=True)
+            row = {"rows": seen.get["n"], "resumed": False,
                    "wall_sec": round(time.monotonic() - t0, 3)}
         metrics.append({"stage": name, **row})
         return df
@@ -171,8 +174,10 @@ def run_dedup(
         e = edges.select("a", "b")
         if sub is not None:
             e = e.unionByName(sub.select("a", "b"))
+        # every rep url is in all_docs, so id_map lists the same nids
+        # as docs without re-running its url shuffle and join
         nid_clusters = connected_components(
-            e, nodes=docs.select("nid"), id_col="nid")
+            e, nodes=id_map.select(F.col("_nid").alias("nid")), id_col="nid")
         # nid component labels -> deterministic url labels: cluster_id
         # = min member url of the component, as a window-min over the
         # label (one shuffle; component labels being arbitrary nids

@@ -174,8 +174,8 @@ def dedup_increment(
     # merged by the new edges. Each endpoint maps to its stored
     # cluster_id, a new doc to itself; every new edge has a new
     # endpoint, so no contracted edge is a self-loop. A stored id is
-    # its component's min url and new urls are unseen, so min-label
-    # still gives cluster_id = min member url.
+    # its component's min url and new urls are unseen, so the CC's
+    # min id label still gives cluster_id = min member url.
     nodes = docs
     if have_clusters:
         stored = store.read("clusters")

@@ -202,8 +202,9 @@ def test_incremental_warm_batch_job_count(spark, corpus, tmp_path):
     """Job-count guard: for a fixed input and config the number of
     Spark jobs is stable, so host noise cannot hide a regression that
     a wall-time check would miss. One warm fresh batch (60 + 60 docs
-    of the fixture) runs 31 jobs; re-clustering the touched
-    components from a stored edge table ran 41."""
+    of the fixture) runs 28 jobs (31 with the min-label CC loop);
+    re-clustering the touched components from a stored edge table ran
+    41."""
     store = CheckpointStore(spark, str(tmp_path / "inc_jobs"), CFG)
     half1 = corpus.limit(60)
     half2 = corpus.subtract(half1)
@@ -217,6 +218,18 @@ def test_incremental_warm_batch_job_count(spark, corpus, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert 0 < jobs <= 34, jobs
+
+
+@pytest.mark.parametrize("include_substring,bound", [(False, 26), (True, 33)])
+def test_run_dedup_job_count(spark, corpus, count_jobs, include_substring,
+                             bound):
+    """Job-count guard for one run_dedup call on the fixture: 24 jobs
+    without the substring pass and 30 with it, bounded at +10%. With a
+    count() job after every stage checkpoint and six jobs per round of
+    a min-label CC loop it ran 55 and 63."""
+    _, jobs = count_jobs(lambda: run_dedup(
+        spark, corpus, CFG, include_substring=include_substring))
+    assert 0 < jobs <= bound, jobs
 
 
 def test_incremental_cc_bounded_by_touched_components(spark, tmp_path):
