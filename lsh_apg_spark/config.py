@@ -21,7 +21,6 @@ class DedupConfig:
 
     # --- shingling / MinHash (maps reference L*K projections, e2lsh.cpp:62-69)
     shingle_size: int = 3          # words per shingle
-    num_hashes: int = 128          # MinHash signature length (= bands * rows_per_band)
     bands: int = 16                # L in reference terms
     rows_per_band: int = 8         # K in reference terms
     # --- multi-probe banding (maps LLCP-ordered probing, e2lsh.cpp:573-699)
@@ -40,15 +39,15 @@ class DedupConfig:
     seed: int = 42
 
     def __post_init__(self) -> None:
-        if self.bands * self.rows_per_band != self.num_hashes:
-            raise ValueError(
-                f"bands*rows_per_band ({self.bands}*{self.rows_per_band}) "
-                f"must equal num_hashes ({self.num_hashes})"
-            )
         if not (0 <= self.num_probes <= self.rows_per_band):
             raise ValueError("num_probes must be in [0, rows_per_band]")
         if self.winnow_kgram >= self.min_substring_len:
             raise ValueError("winnow_kgram must be < min_substring_len")
+
+    @property
+    def num_hashes(self) -> int:
+        """MinHash signature length: one value per row of every band."""
+        return self.bands * self.rows_per_band
 
     @property
     def winnow_window(self) -> int:
@@ -72,11 +71,13 @@ class DedupConfig:
     # v5: the incremental store keeps `docs` as a url ledger and
     # `edges` as endpoints only (a, b). v6: signatures dropped the
     # unread `simhash` column, and the incremental store keeps no
-    # `edges` table (docs, signatures, clusters only).
+    # `edges` table (docs, signatures, clusters only). v7: the
+    # incremental store is one table, docs (url, cluster_id, shingles,
+    # bhashes); `num_hashes` is derived, no longer a config field.
     # NB: the incremental store FAILS LOUDLY on a version mismatch
     # instead of silently restarting state (streaming/incremental.py,
     # ADVICE r2).
-    SCHEMA_VERSION = 6
+    SCHEMA_VERSION = 7
 
     def config_id(self) -> str:
         """Stable identity string stored beside every checkpoint."""

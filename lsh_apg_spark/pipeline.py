@@ -36,10 +36,8 @@ from lsh_apg_spark.sources.checkpoints import CheckpointStore
 
 @dataclass
 class DedupResult:
-    signatures: DataFrame
     pairs: DataFrame
     edges: DataFrame          # (a, b, jaccard) — representative docs
-    substring: DataFrame | None  # (a, b, lcs_len) or None
     clusters: DataFrame       # (url, cluster_id) — every input url
     metrics: list[dict]
 
@@ -197,11 +195,9 @@ def run_dedup(
     clusters = stage("clusters_substring" if include_substring
                      else "clusters", build_clusters)
 
-    def _edges_with_urls(df: DataFrame | None) -> DataFrame | None:
+    def _edges_with_urls(df: DataFrame) -> DataFrame:
         """Map nid edge endpoints back to urls for the exposed result
         (lazy — only pays its joins if a consumer materializes it)."""
-        if df is None:
-            return None
         ua = id_map.select(F.col("_nid").alias("a"),
                            F.col("url").alias("_ua"))
         ub = id_map.select(F.col("_nid").alias("b"),
@@ -222,10 +218,8 @@ def run_dedup(
         groups, cfg, total_bucket_rows).collect()[0].asDict()
     metrics.append({"stage": "bucket_stats", **stats})
 
-    return DedupResult(signatures=signatures,
-                       pairs=_edges_with_urls(pairs),
+    return DedupResult(pairs=_edges_with_urls(pairs),
                        edges=_edges_with_urls(edges),
-                       substring=_edges_with_urls(sub),
                        clusters=clusters, metrics=metrics)
 
 

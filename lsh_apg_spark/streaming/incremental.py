@@ -2,45 +2,43 @@
 insertLSHRefine src/divGraph.h:471-526, reinterpreted without shared
 mutable state — SURVEY.md §2.10).
 
-State is three checkpoint tables, each holding only what a later batch
-reads:
+State is one checkpoint table, one row per url seen so far, like the
+reference's one index entry per inserted point:
 
-  docs        (url)                       the ledger of urls seen so far
-  signatures  (url, shingles, bhashes)    the probe index and verify input
-  clusters    (url, cluster_id)           the current assignment
+  docs  (url, cluster_id, shingles, bhashes)
 
-Raw pages are not retained. The bucket rows are not stored either:
-they are the explode of the stored signatures' `bhashes`, and parquet
-column pruning reads only that column back. Nor are the verified
-edges: edges are only ever added, so the stored clusters already hold
-everything a later batch needs from them, and a store without
-clusters recomputes them from the stored signatures.
+Each reader takes only its columns, and parquet column pruning reads
+only those back: the anti-join reads `url`, the probe `bhashes`, verify
+`shingles`, the contraction `cluster_id`. Raw pages are not retained.
+The bucket rows are not stored: they are the explode of the stored
+`bhashes`. Nor are the verified edges: edges are only ever added, so
+the stored cluster ids already hold everything a later batch needs
+from them.
 
 Per batch of new pages:
 
   1. one row per url (pipeline.one_text_per_url), then an anti-join
-     against the docs ledger (idempotent re-delivery), materialized
+     against the stored urls (idempotent re-delivery), materialized
      once; its row count rides that same job;
-  2. no new doc left (a full re-delivery): return the stored cluster
-     table and write nothing;
+  2. no new doc left (a full re-delivery): return the stored
+     assignment and write nothing;
   3. signatures for the NEW docs only, materialized once — the only
      run of the signature UDF in the batch; with ``eval_docs``,
      ``decontaminate()`` drops contaminated new docs here, reusing
      those signatures;
-  4. candidate pairs = new-vs-all equi-join on bucket keys (the new
-     docs probe the existing 'hash table', exactly like the
-     reference's per-point searchLSH probe) + new-vs-new pairs;
-  5. verify against the union signatures;
-  6. one CC over the stored components contracted to their ids: each
-     new edge's endpoints map to their stored cluster_id (a new doc to
-     itself), the contracted edges are materialized once, the new docs
-     are the nodes, and the stored rows take the label of their old
-     id. A store without clusters (a cold start, or the recovery path)
-     instead pairs and verifies every stored signature and runs the CC
-     over every doc. Then one commit of the three tables.
+  4. candidate pairs: on a cold batch over the batch alone, on a warm
+     one the new docs probe the stored bucket keys (exactly like the
+     reference's per-point searchLSH probe) and keep the pairs with a
+     new endpoint;
+  5. verify against the stored plus the new signatures;
+  6. one CC over the new docs and the new edges, each endpoint
+     contracted to its stored cluster_id (a new doc to itself); the
+     stored rows take the label of their old id;
+  7. one commit of the one table.
 
-Every table only grows by the batch, and every step is a pure
-DataFrame job, so a crashed batch just re-runs."""
+The table only grows by the batch, every step is a pure DataFrame job,
+and a batch commits with one table swap, so a failed batch leaves the
+previous state readable and just re-runs."""
 
 from __future__ import annotations
 
@@ -89,7 +87,7 @@ def dedup_increment(
     only the broadcast eval probe), and never enter the corpus state:
     decontamination-at-ingest for a training pipeline.
 
-    A store whose sidecars were written under a DIFFERENT config or
+    A store whose sidecar was written under a DIFFERENT config or
     schema version is an ERROR by default (``on_mismatch="fail"``):
     the cold-start path would overwrite the accumulated corpus state
     with just this batch, and raw pages are not retained anywhere to
@@ -98,8 +96,8 @@ def dedup_increment(
     and restart from this batch."""
     new_docs = one_text_per_url(new_pages)
 
-    state_status = store.status("docs")
-    if state_status == "mismatch":
+    status = store.status("docs")
+    if status == "mismatch":
         if on_mismatch != "reset":
             raise RuntimeError(
                 f"incremental store at {store.root} holds state written "
@@ -109,35 +107,29 @@ def dedup_increment(
                 "Re-run with the original config, or pass "
                 "on_mismatch='reset' to intentionally restart state from "
                 "this batch.")
-        for stage in ("docs", "signatures", "clusters"):
-            store.invalidate(stage)
-    have_state = store.exists("docs")
-    have_clusters = have_state and store.exists("clusters")
+        store.invalidate("docs")
+    warm = status == "ok"
 
-    def grown(name: str, new: DataFrame) -> DataFrame:
-        """The stored table plus this batch's rows (disjoint: the batch
-        holds only unseen urls), or just the batch on a cold start."""
-        return store.read(name).unionByName(new) if have_state else new
-
-    if have_state:
-        new_docs = new_docs.join(store.read("docs"), "url", "left_anti")
+    if warm:
+        stored = store.read("docs")
+        new_docs = new_docs.join(stored.select("url"), "url", "left_anti")
 
     # every later step reads the batch's new docs and signatures several
-    # times (the state writes, the CC, the metrics); each is
+    # times (the state write, the CC, the metrics); each is
     # materialized once, so no write re-runs the anti-join or the
     # signature UDF. The new-doc count rides the materializing job.
     seen = Observation("new_docs")
     new_docs = new_docs.observe(seen, F.count(F.lit(1)).alias("n")) \
         .localCheckpoint(eager=True)
     n_new = seen.get["n"]
-    if n_new == 0 and have_clusters:
+    if n_new == 0 and warm:
         # full re-delivery: every url is already in the state, so the
         # stored assignment is the answer and nothing is rewritten
         if metrics is not None:
             metrics.update(cc_nodes=0, cc_edges=0)
             if eval_docs is not None:
                 metrics["contaminated_dropped"] = 0
-        return store.read("clusters")
+        return stored.select("url", "cluster_id")
 
     new_sigs = compute_signatures(new_docs, cfg).localCheckpoint(eager=True)
     if eval_docs is not None:
@@ -148,15 +140,13 @@ def dedup_increment(
             metrics["contaminated_dropped"] = n_new - new_docs.count()
 
     new_ids = new_docs.select("url")
-    docs = grown("docs", new_ids)
-    sigs = grown("signatures", new_sigs)
-    if have_clusters:
-        # warm batch: new docs PROBE the existing bucket state (the
-        # reference's per-point searchLSH insert probe,
-        # src/divGraph.h:359-469): only bucket keys that a new doc
-        # lands in can mint a new pair, so pair generation runs over
-        # that sliver of the bucket table, and keeps the pairs with a
-        # new endpoint
+    if warm:
+        # new docs PROBE the stored bucket keys (the reference's
+        # per-point searchLSH insert probe, src/divGraph.h:359-469):
+        # only bucket keys that a new doc lands in can mint a new pair,
+        # so pair generation runs over that sliver of the bucket table,
+        # and keeps the pairs with a new endpoint
+        sigs = stored.select(*new_sigs.columns).unionByName(new_sigs)
         touched_keys = explode_buckets(new_sigs, cfg).select("bhash") \
             .distinct()
         cands = candidate_pairs(explode_buckets(sigs, cfg).join(
@@ -166,20 +156,18 @@ def dedup_increment(
             cands.join(new_ids.withColumnRenamed("url", "b"), "b",
                        "left_semi")).dropDuplicates(["a", "b"])
     else:
+        sigs = new_sigs
         pairs = candidate_pairs(explode_buckets(sigs, cfg), cfg)
     edges = verify_edges(pairs, sigs, cfg).select("a", "b")
 
-    # incremental CC over the contracted graph: edges are only ever
-    # added, so the components after this batch are the stored ones
-    # merged by the new edges. Each endpoint maps to its stored
-    # cluster_id, a new doc to itself; every new edge has a new
-    # endpoint, so no contracted edge is a self-loop. A stored id is
-    # its component's min url and new urls are unseen, so the CC's
-    # min id label still gives cluster_id = min member url.
-    nodes = docs
-    if have_clusters:
-        stored = store.read("clusters")
-
+    if warm:
+        # incremental CC over the contracted graph: edges are only ever
+        # added, so the components after this batch are the stored ones
+        # merged by the new edges. Each endpoint maps to its stored
+        # cluster_id, a new doc to itself; every new edge has a new
+        # endpoint, so no contracted edge is a self-loop. A stored id
+        # is its component's min url and new urls are unseen, so the
+        # CC's min id label still gives cluster_id = min member url.
         def stored_id(end: str) -> DataFrame:
             return stored.select(F.col("url").alias(end),
                                  F.col("cluster_id").alias(f"_{end}"))
@@ -190,35 +178,32 @@ def dedup_increment(
             .select(F.coalesce("_a", "a").alias("a"),
                     F.coalesce("_b", "b").alias("b"))
         )
-        nodes = new_ids
     # materialized once, so the batch's pair and verify work runs here
     # and not inside the CC; the edge count rides the same job
     graph = Observation("cc_edges")
     edges = edges.observe(graph, F.count(F.lit(1)).alias("n")) \
         .localCheckpoint(eager=True)
-    labels = connected_components(edges, nodes=nodes)
+    # every doc of a cold batch is new, so the new docs are the nodes
+    # either way
+    labels = connected_components(edges, nodes=new_ids)
     if metrics is not None:
         metrics["cc_nodes"] = labels.count()
         metrics["cc_edges"] = graph.get["n"]
-    clusters = labels
-    if have_clusters:
+    cols = ["url", "cluster_id", "shingles", "bhashes"]
+    rows = new_sigs.join(labels, "url").select(cols)
+    if warm:
         # a stored row takes its old id's new label (the CC output is
-        # the small contracted graph, so it broadcasts); the new docs'
-        # rows come straight from the CC
+        # the small contracted graph, so it broadcasts)
         remap = labels.select(F.col("url").alias("cluster_id"),
                               F.col("cluster_id").alias("_to"))
-        clusters = (
-            stored.join(F.broadcast(remap), "cluster_id", "left")
-            .select("url", F.coalesce("_to", "cluster_id").alias("cluster_id"))
-            .unionByName(labels.join(new_ids, "url", "left_semi"))
-        )
+        rows = stored.join(F.broadcast(remap), "cluster_id", "left") \
+            .withColumn("cluster_id", F.coalesce("_to", "cluster_id")) \
+            .select(cols).unionByName(rows)
 
-    # persist refreshed state: two-phase write_many, because every one
-    # of these plans still lazily READS the previous checkpoints —
-    # swapping paths one at a time would pull files out from under the
-    # later writes (see CheckpointStore.write_many)
-    return store.write_many({"docs": docs, "signatures": sigs,
-                             "clusters": clusters})["clusters"]
+    # the new table's plan still lazily READS the stored one, so the
+    # store writes it to a tmp dir while the old files are on disk and
+    # only then swaps the path: a failed write leaves the old table
+    return store.write(rows, "docs").select("url", "cluster_id")
 
 
 def stream_dedup(

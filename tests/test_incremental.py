@@ -8,6 +8,7 @@ from __future__ import annotations
 import hashlib
 
 import pytest
+from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
 from lsh_apg_spark.config import DedupConfig
@@ -38,15 +39,15 @@ def test_incremental_equals_batch(spark, corpus, tmp_path):
     cold = dedup_increment(spark, half1, store, CFG)
     final = dedup_increment(spark, half2, store, CFG)
     assert _assignments(final) == _assignments(batch)
-    # cold and warm batches return and store the run_dedup column order
-    for df in (batch, cold, final, store.read("clusters")):
+    # cold and warm batches return the run_dedup column order
+    for df in (batch, cold, final):
         assert df.columns == ["url", "cluster_id"]
-    # bucket rows are re-derived from the stored signatures, and edges
-    # from the stored clusters: neither is stored
+    # the state is one table, one row per url: bucket rows are
+    # re-derived from its `bhashes`, and edges from its cluster ids
     assert sorted(p.name for p in (tmp_path / "inc").iterdir()
-                  if p.is_dir()) == ["clusters", "docs", "signatures"]
-    # docs is a url ledger
-    assert store.read("docs").columns == ["url"]
+                  if p.is_dir()) == ["docs"]
+    assert store.read("docs").columns == ["url", "cluster_id", "shingles",
+                                          "bhashes"]
 
 
 def test_incremental_redelivery_idempotent(spark, corpus, tmp_path):
@@ -57,8 +58,10 @@ def test_incremental_redelivery_idempotent(spark, corpus, tmp_path):
     a1 = _assignments(first)
     again = dedup_increment(spark, corpus, store, CFG)  # full re-delivery
     assert _assignments(again) == a1
-    for df in (first, again, store.read("clusters")):
+    for df in (first, again):
         assert df.columns == ["url", "cluster_id"]
+    assert _assignments(
+        store.read("docs").select("url", "cluster_id")) == a1
 
 
 def _state_files(root):
@@ -82,6 +85,29 @@ def test_incremental_redelivery_writes_nothing(spark, corpus, tmp_path):
     assert _state_files(root) == before
 
 
+def test_incremental_failed_commit_leaves_state(spark, corpus, tmp_path,
+                                                monkeypatch):
+    """A warm batch whose commit write fails leaves every state file
+    as it was, and re-delivering the batch then lands on the one-shot
+    assignment."""
+    root = tmp_path / "inc_fail"
+    store = CheckpointStore(spark, str(root), CFG)
+    dedup_increment(spark, corpus.limit(60), store, CFG)
+    before = _state_files(root)
+
+    def fail(self, *args, **kwargs):
+        raise OSError("disk full")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", fail)
+        with pytest.raises(OSError, match="disk full"):
+            dedup_increment(spark, corpus, store, CFG)
+    assert _state_files(root) == before
+    final = dedup_increment(spark, corpus, store, CFG)
+    batch = run_dedup(spark, corpus, CFG, include_substring=False).clusters
+    assert _assignments(final) == _assignments(batch)
+
+
 def test_incremental_mixed_batch_equals_batch(spark, corpus, tmp_path):
     """A batch that is half re-delivered, half new adds only the new
     half and still lands on the one-shot assignment."""
@@ -94,23 +120,6 @@ def test_incremental_mixed_batch_equals_batch(spark, corpus, tmp_path):
     batch = run_dedup(spark, corpus, CFG, include_substring=False).clusters
     assert _assignments(final) == _assignments(batch)
     assert store.lineage("docs")["rows"] == len(urls)
-
-
-def test_incremental_without_cluster_table_equals_batch(spark, corpus,
-                                                         tmp_path):
-    """A store whose cluster table is missing re-clusters every doc
-    and edge on the next batch and still lands on the one-shot
-    assignment."""
-    store = CheckpointStore(spark, str(tmp_path / "inc_nocl"), CFG)
-    half1 = corpus.limit(60)
-    dedup_increment(spark, half1, store, CFG)
-    store.invalidate("clusters")
-    metrics: dict = {}
-    final = dedup_increment(spark, corpus.subtract(half1), store, CFG,
-                            metrics=metrics)
-    batch = run_dedup(spark, corpus, CFG, include_substring=False).clusters
-    assert _assignments(final) == _assignments(batch)
-    assert metrics["cc_nodes"] == corpus.count()
 
 
 def test_incremental_batch_fully_decontaminated(spark, tmp_path):
@@ -133,10 +142,10 @@ def test_incremental_batch_fully_decontaminated(spark, tmp_path):
     assert _assignments(out) == [("p_clean1", "p_clean1"),
                                  ("p_clean2", "p_clean2")]
     assert metrics["contaminated_dropped"] == 1
-    for name in ("docs", "signatures", "clusters"):
-        assert store.status(name) == "ok", name
+    assert store.status("docs") == "ok"
     assert store.lineage("docs")["rows"] == 2
-    assert _assignments(store.read("clusters")) == _assignments(out)
+    assert _assignments(store.read("docs").select("url", "cluster_id")) \
+        == _assignments(out)
 
 
 def _words(lo, hi):
@@ -198,26 +207,21 @@ def test_repeated_url_keeps_smallest_md5_text(spark, tmp_path, second):
     assert _assignments(dedup_increment(spark, pages, store, CFG)) == expected
 
 
-def test_incremental_warm_batch_job_count(spark, corpus, tmp_path):
+def test_incremental_warm_batch_job_count(spark, corpus, tmp_path,
+                                          count_jobs):
     """Job-count guard: for a fixed input and config the number of
     Spark jobs is stable, so host noise cannot hide a regression that
-    a wall-time check would miss. One warm fresh batch (60 + 60 docs
-    of the fixture) runs 28 jobs (31 with the min-label CC loop);
-    re-clustering the touched components from a stored edge table ran
-    41."""
+    a wall-time check would miss. On the fixture a cold 60-doc batch,
+    a warm fresh batch of the other 60 and a full re-delivery run
+    15/21/4 jobs, bounded at +10%. With three state tables (a url
+    ledger, signatures, clusters) they ran 18/28/5; re-clustering the
+    touched components from a stored edge table ran 41 warm."""
     store = CheckpointStore(spark, str(tmp_path / "inc_jobs"), CFG)
     half1 = corpus.limit(60)
     half2 = corpus.subtract(half1)
-    dedup_increment(spark, half1, store, CFG)
-    sc = spark.sparkContext
-    group = "test_incremental_warm_batch_job_count"
-    sc.setJobGroup(group, group)
-    try:
-        dedup_increment(spark, half2, store, CFG)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert 0 < jobs <= 34, jobs
+    jobs = [count_jobs(lambda b=b: dedup_increment(spark, b, store, CFG))[1]
+            for b in (half1, half2, corpus)]
+    assert all(0 < j <= bound for j, bound in zip(jobs, (16, 23, 4))), jobs
 
 
 @pytest.mark.parametrize("include_substring,bound", [(False, 26), (True, 33)])
@@ -269,7 +273,8 @@ def test_structured_streaming_drain(spark, corpus, tmp_path):
                      stream_checkpoint=str(tmp_path / "sck"))
     q.awaitTermination(300)
     batch = run_dedup(spark, corpus, CFG, include_substring=False).clusters
-    assert _assignments(store.read("clusters")) == _assignments(batch)
+    assert _assignments(store.read("docs").select("url", "cluster_id")) \
+        == _assignments(batch)
 
 
 def test_incremental_decontaminates_at_ingest(spark, tmp_path):
