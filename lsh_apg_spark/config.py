@@ -74,10 +74,12 @@ class DedupConfig:
     # `edges` table (docs, signatures, clusters only). v7: the
     # incremental store is one table, docs (url, cluster_id, shingles,
     # bhashes); `num_hashes` is derived, no longer a config field.
+    # v8: run_dedup's stages are keyed by url, not by an xxhash64 nid
+    # (the incremental store's docs table is unchanged).
     # NB: the incremental store FAILS LOUDLY on a version mismatch
     # instead of silently restarting state (streaming/incremental.py,
     # ADVICE r2).
-    SCHEMA_VERSION = 7
+    SCHEMA_VERSION = 8
 
     def config_id(self) -> str:
         """Stable identity string stored beside every checkpoint."""

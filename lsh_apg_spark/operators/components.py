@@ -127,7 +127,7 @@ def connected_components(
 
     ``nodes`` supplies singleton documents (no edges) so every doc gets
     an assignment; if omitted, only endpoint docs are labeled. The id
-    type is the edges' own (long nids, url strings).
+    type is the edges' own (url strings in the engine).
     """
     labels, rows = _labels(edges.select("a", "b"), 0)
     if nodes is not None:

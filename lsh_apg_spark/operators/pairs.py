@@ -3,7 +3,7 @@
 candidate cap lshUB, src/divGraph.h:369-370,934-937).
 
 Shape chosen for 10^12-row scale: the bucket "hash table" is built with
-ONE wide shuffle (window count over 16-byte (id, key) rows; the
+ONE wide shuffle (window count over the (id, key) rows; the
 singleton majority is discarded there, and collect_list runs
 partition-local over the survivors only), and pair expansion is
 ROW-LOCAL (a double `explode` of each bucket's member array — no
@@ -40,11 +40,10 @@ from lsh_apg_spark.functions.hashing import canonical_pair
 BUCKET_KEY = ["bhash"]
 
 
-def nonsingleton_buckets(buckets: DataFrame,
-                         cfg: DedupConfig | None = None) -> DataFrame:
+def nonsingleton_buckets(buckets: DataFrame) -> DataFrame:
     """(id, bhash) -> same rows + `_n` bucket size, with singleton
     buckets removed. One wide shuffle (the window's sorted count over
-    16-byte rows). Measured alternatives both lose: collect_list over
+    the bucket rows). Measured alternatives both lose: collect_list over
     every key pays object churn on the singleton majority (2-3x), and
     a count-aggregate + filter + join back over the explode pays a
     second full scan plus a join that costs more than the sort saves
@@ -63,11 +62,10 @@ def bucket_arrays(buckets: DataFrame, cfg: DedupConfig,
     collect_list aggregates ONLY the multi-member survivor rows. The
     caller should MATERIALIZE this survivor set (the pipeline
     checkpoints it): it is small, and candidate_pairs + skew stats both
-    read it."""
-    src = buckets if "_n" in buckets.columns \
-        else nonsingleton_buckets(buckets, cfg)
+    read it. ``cfg`` is unused; it keeps the (frame, cfg, id_col) shape
+    every stage operator has."""
     return (
-        src.groupBy(*BUCKET_KEY)
+        nonsingleton_buckets(buckets).groupBy(*BUCKET_KEY)
         .agg(F.collect_list(id_col).alias("ids"))
         .withColumn("_n", F.size("ids"))
     )

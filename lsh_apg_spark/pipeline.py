@@ -2,11 +2,16 @@
 reference's main build+query program, src/main.cpp:11-230, recast as
 the staged dataflow of SURVEY.md §3.4):
 
-  pages ─► signatures ─► bucket_groups ─► pairs ─► edges ─► clusters
-      └► substring edges (winnowing) ─────────────────────┘
+  pages ─► rep_map ─► signatures ─► bucket_groups ─► pairs ─► edges ─► clusters
+               └► substring edges (winnowing) ───────────────────────┘
 
 (the bucket rows between signatures and bucket_groups are a lazy
 explode of the signatures' `bhashes`, never stored)
+
+Exact duplicates collapse first onto one representative url each
+(``rep_map``); every later stage is keyed by the representatives' urls,
+the id space of ``dedup_increment`` and of the cluster table, so a
+pair, an edge and a cluster_id all name pages directly.
 
 Every stage optionally checkpoints through CheckpointStore (resume =
 the reference's cache-or-build ben_create / index save-load, for the
@@ -36,8 +41,8 @@ from lsh_apg_spark.sources.checkpoints import CheckpointStore
 
 @dataclass
 class DedupResult:
-    pairs: DataFrame
-    edges: DataFrame          # (a, b, jaccard) — representative docs
+    pairs: DataFrame          # (a, b) — representative urls, a < b
+    edges: DataFrame          # (a, b, jaccard) — representative urls, a < b
     clusters: DataFrame       # (url, cluster_id) — every input url
     metrics: list[dict]
 
@@ -130,27 +135,12 @@ def run_dedup(
     if store is not None:
         store.input_id = store.lineage("rep_map")["input_id"]
 
-    # compact 64-bit ids for everything between here and the final
-    # url mapping: the banding/pair/CC stages are shuffle- and
-    # sort-heavy, and an 8-byte id vs a ~40-60B url string is a ~3x
-    # row-width (= memory-bandwidth = shuffle-volume) reduction — the
-    # Spark analogue of the reference working on int ids (src/def.h).
-    # xxhash64 nid collision failure mode: two DISTINCT documents fuse
-    # into one graph node, silently merging their clusters with no
-    # content check (verification never sees the pair — they share an
-    # id). Probability ~n^2/2^65: negligible for sandbox corpora, and
-    # at 10^12 docs the id must widen to 128 bits. A cheap guard for
-    # paranoid runs: assert id_map.count() == id_map.select("_nid")
-    # .distinct().count().
-    id_map = (
-        rep_map.filter(F.col("url") == F.col("_rep"))
-        .select("url", F.xxhash64(F.col("url"), F.lit(17)).alias("_nid"))
-    )
-    docs = id_map.join(all_docs, "url").select(
-        F.col("_nid").alias("nid"), "text")
+    # every stage from here on works on the representatives' urls, the
+    # same id space as dedup_increment and the final cluster table
+    reps = rep_map.filter(F.col("url") == F.col("_rep")).select("url")
+    docs = all_docs.join(reps, "url", "left_semi")
 
-    signatures = stage("signatures", lambda: compute_signatures(
-        docs, cfg, id_col="nid"))
+    signatures = stage("signatures", lambda: compute_signatures(docs, cfg))
     # the bucket explode is cheap JVM work over the materialized
     # signatures, so it stays lazy (never stored or checkpointed)
     # rather than materializing ~bands*(1+probes) rows per doc; the
@@ -158,56 +148,29 @@ def run_dedup(
     # to the explode, and candidate_pairs fans out over it from several
     # join branches
     groups = stage("bucket_groups", lambda: bucket_arrays(
-        explode_buckets(signatures, cfg, id_col="nid"), cfg, id_col="nid"))
-    pairs = stage("pairs", lambda: candidate_pairs(groups, cfg, id_col="nid"))
-    edges = stage("edges", lambda: verify_edges(
-        pairs, signatures, cfg, id_col="nid"))
+        explode_buckets(signatures, cfg), cfg))
+    pairs = stage("pairs", lambda: candidate_pairs(groups, cfg))
+    edges = stage("edges", lambda: verify_edges(pairs, signatures, cfg))
 
     sub = None
     if include_substring:
-        sub = stage("substring_edges", lambda: substring_edges(
-            docs, cfg, id_col="nid"))
+        sub = stage("substring_edges", lambda: substring_edges(docs, cfg))
 
     def build_clusters() -> DataFrame:
         e = edges.select("a", "b")
         if sub is not None:
             e = e.unionByName(sub.select("a", "b"))
-        # every rep url is in all_docs, so id_map lists the same nids
-        # as docs without re-running its url shuffle and join
-        nid_clusters = connected_components(
-            e, nodes=id_map.select(F.col("_nid").alias("nid")), id_col="nid")
-        # nid component labels -> deterministic url labels: cluster_id
-        # = min member url of the component, as a window-min over the
-        # label (one shuffle; component labels being arbitrary nids
-        # never leak out — same one-pass rationale as build_rep_map)
-        members = nid_clusters.withColumnRenamed("cluster_id", "_lab") \
-            .withColumnRenamed("nid", "_nid").join(id_map, "_nid")
-        rep_clusters = members.select(
-            F.col("url").alias("_rep"),
-            F.min("url").over(Window.partitionBy("_lab"))
-            .alias("cluster_id"))
-        # expand representative clusters back to every url; the rep is
-        # its exact-group's min url, so cluster_id == global min member
-        return rep_map.join(rep_clusters, "_rep").select("url", "cluster_id")
+        # a component's label is its min rep url, and a rep is its
+        # exact group's min url, so the label is the min member url
+        labels = connected_components(e, nodes=reps) \
+            .withColumnRenamed("url", "_rep")
+        # expand representative clusters back to every url
+        return rep_map.join(labels, "_rep").select("url", "cluster_id")
 
     # the substring edges change the graph, so a cluster table built
     # with them is a different stage: neither variant resumes the other
     clusters = stage("clusters_substring" if include_substring
                      else "clusters", build_clusters)
-
-    def _edges_with_urls(df: DataFrame) -> DataFrame:
-        """Map nid edge endpoints back to urls for the exposed result
-        (lazy — only pays its joins if a consumer materializes it)."""
-        ua = id_map.select(F.col("_nid").alias("a"),
-                           F.col("url").alias("_ua"))
-        ub = id_map.select(F.col("_nid").alias("b"),
-                           F.col("url").alias("_ub"))
-        others = [c for c in df.columns if c not in ("a", "b")]
-        return (
-            df.join(ua, "a").join(ub, "b")
-            .select(F.least("_ua", "_ub").alias("a"),
-                    F.greatest("_ua", "_ub").alias("b"), *others)
-        )
 
     # skew observability: bucket-size distribution into metrics,
     # derived from the small materialized survivor set (the full
@@ -218,9 +181,8 @@ def run_dedup(
         groups, cfg, total_bucket_rows).collect()[0].asDict()
     metrics.append({"stage": "bucket_stats", **stats})
 
-    return DedupResult(pairs=_edges_with_urls(pairs),
-                       edges=_edges_with_urls(edges),
-                       clusters=clusters, metrics=metrics)
+    return DedupResult(pairs=pairs, edges=edges, clusters=clusters,
+                       metrics=metrics)
 
 
 def pages_from_documents(docs: DataFrame) -> DataFrame:

@@ -41,13 +41,18 @@ def test_config_change_invalidates(spark, tmp_path):
 
 def test_pipeline_resume_identical(spark, tmp_path):
     """North-rule resume: second run reuses every stage and produces
-    byte-identical assignments."""
+    byte-identical assignments. The stages are keyed by url, the row
+    shape of the incremental store."""
     fx = generate_pages(n_docs=80, seed=7)
     pages = spark.createDataFrame(fx.pages, schema=PAGES_SCHEMA)
     ckpt = str(tmp_path / "ckpt")
     r1 = run_dedup(spark, pages, CFG, checkpoint_dir=ckpt,
                    include_substring=False)
     first = sorted((r["url"], r["cluster_id"]) for r in r1.clusters.collect())
+    store = CheckpointStore(spark, ckpt, CFG)
+    assert store.read("signatures").columns == ["url", "shingles", "bhashes"]
+    ends = {u for r in store.read("edges").collect() for u in (r["a"], r["b"])}
+    assert ends and ends <= set(fx.pages["url"])
     r2 = run_dedup(spark, pages, CFG, checkpoint_dir=ckpt,
                    include_substring=False)
     resumed = {m["stage"]: m.get("resumed") for m in r2.metrics
