@@ -1,5 +1,5 @@
-"""JVM-side column expressions: canonical pair keys, the md5-frozen
-SimHash, SimHash Hamming.
+"""JVM-side column expressions: the md5-frozen SimHash, SimHash
+Hamming.
 
 Everything here stays inside whole-stage codegen (higher-order
 functions, bit ops) — no Python UDFs."""
@@ -8,15 +8,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def canonical_pair(a: Column | str, b: Column | str) -> tuple[Column, Column]:
-    """Order-independent undirected pair key (maps divGraph::getKey,
-    src/divGraph.h:909-917): (least, greatest) so every undirected edge
-    has exactly one row, whatever order the join produced it in."""
-    a, b = F.col(a) if isinstance(a, str) else a, F.col(b) if isinstance(b, str) else b
-    return F.least(a, b), F.greatest(a, b)
-
 
 _HEX_ALPHABET = "0123456789abcdef"
 

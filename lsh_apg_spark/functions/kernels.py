@@ -352,3 +352,18 @@ def longest_common_substring_len(a: str, b: str) -> int:
         else:
             hi = mid - 1
     return lo
+
+
+def shares_substring(a: str, b: str, min_len: int) -> bool:
+    """longest_common_substring_len(a, b) >= min_len, decided by ONE
+    shared-window test at length min_len instead of the binary search
+    (same window hashes, same trust model, same code-point unit)."""
+    if min_len <= 0:
+        return True
+    da = _codepoints(a)
+    db = _codepoints(b)
+    if len(da) < min_len or len(db) < min_len:
+        return False
+    ha = _window_hashes(*_hash_prefix(da), min_len)
+    hb = _window_hashes(*_hash_prefix(db), min_len)
+    return bool(np.intersect1d(ha, hb).size)

@@ -13,7 +13,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType, LongType, StructField, StructType,
+    ArrayType, BooleanType, LongType, StructField, StructType,
 )
 
 from lsh_apg_spark.config import DedupConfig
@@ -111,3 +111,17 @@ def make_lcs_udf():
             ], dtype=np.int64)
 
     return lcs_udf
+
+
+def make_shares_substring_udf(min_len: int):
+    """(text_a, text_b) -> boolean: the texts share a span of at least
+    ``min_len`` code points (lcs_len >= min_len, one window test)."""
+    @F.pandas_udf(BooleanType())
+    def shares_udf(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
+        for text_a, text_b in it:
+            yield pd.Series([
+                kernels.shares_substring(ta or "", tb or "", min_len)
+                for ta, tb in zip(text_a, text_b)
+            ], dtype=bool)
+
+    return shares_udf

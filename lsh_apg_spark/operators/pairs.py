@@ -3,27 +3,27 @@
 candidate cap lshUB, src/divGraph.h:369-370,934-937).
 
 Shape chosen for 10^12-row scale: the bucket "hash table" is built with
-ONE wide shuffle (window count over the (id, key) rows; the
-singleton majority is discarded there, and collect_list runs
-partition-local over the survivors only), and pair expansion is
-ROW-LOCAL (a double `explode` of each bucket's member array — no
-self-join anywhere). Skew policy (the north_rule's explicit hot-bucket
-handling):
+ONE wide shuffle (a window over the (id, key) rows by key gives each
+row its bucket size and bucket-min id; the singleton majority is
+discarded there, and collect_list runs partition-local over the
+survivors only), and pair expansion is ROW-LOCAL (a double `explode`
+of each row's member array — no self-join anywhere), so the only other
+shuffle is the one that drops duplicate pairs. Skew policy (the
+north_rule's explicit hot-bucket handling):
 
-* buckets with <= bucket_cap members: all-pairs within the row
-  (bounded at cap^2 output rows per bucket);
+* buckets with <= bucket_cap members form one row and yield all their
+  pairs (bounded at cap^2 output rows per bucket);
 * larger buckets are SALTED into subgroups of expected size
-  salt_subgroup via a deterministic hash of the doc id; all-pairs run
-  within each subgroup, and subgroups re-connect through a STAR onto
-  the bucket-min representative, so a capped bucket still resolves
-  into one component transitively via CC — candidate volume drops from
-  O(n^2) to O(n*cap) without silently losing connectivity, and the
-  star keeps the bucket graph at diameter 2 so CC rounds stay O(log n).
+  salt_subgroup via a deterministic hash of the doc id, one row per
+  subgroup; all-pairs run within each row, and each row also emits
+  the STAR pair (bucket-min id, row-min id), so a capped bucket still
+  resolves into one component transitively via CC — candidate volume
+  drops from O(n^2) to O(n*cap) without silently losing connectivity.
   The salt modulus rounds the subgroup count up to a power of two: a
   hot document set lands in ~every band with slightly different bucket
   sizes, and a size-exact modulus would partition it differently per
   band — multiplying the emitted pair set by the band count before
-  dropDuplicates could collapse it.
+  the dedup could collapse it.
 
 Nothing here depends on row order or partitioning: the emitted pair
 SET is deterministic (unlike the reference's clock-seeded insertion
@@ -35,7 +35,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from lsh_apg_spark.config import DedupConfig
-from lsh_apg_spark.functions.hashing import canonical_pair
 
 BUCKET_KEY = ["bhash"]
 
@@ -57,17 +56,31 @@ def nonsingleton_buckets(buckets: DataFrame) -> DataFrame:
 
 def bucket_arrays(buckets: DataFrame, cfg: DedupConfig,
                   id_col: str = "url") -> DataFrame:
-    """(id, bhash) -> (bhash, ids, _n) with singleton buckets removed.
+    """(id, bhash) -> (bhash, salt, _n, _root, ids): one row per bucket
+    of 2..bucket_cap members (salt 0), one row per salted subgroup of a
+    larger bucket. `_n` is the whole bucket's size and `_root` its min
+    id on every row of the bucket.
 
-    collect_list aggregates ONLY the multi-member survivor rows. The
-    caller should MATERIALIZE this survivor set (the pipeline
-    checkpoints it): it is small, and candidate_pairs + skew stats both
-    read it. ``cfg`` is unused; it keeps the (frame, cfg, id_col) shape
-    every stage operator has."""
+    One window by `bhash` (nonsingleton_buckets' measured form)
+    computes both, and the grouping key extends its partitioning, so
+    the groupBy adds no exchange. The caller should MATERIALIZE this
+    survivor set (the pipeline checkpoints it): it is small, and
+    candidate_pairs + skew stats both read it."""
+    w_bucket = Window.partitionBy(*BUCKET_KEY)
+    n = F.col("_n")
+    n_subgroups = F.pow(
+        F.lit(2.0), F.ceil(F.log2(F.ceil(n / cfg.salt_subgroup)))
+    ).cast("long")
+    salt = F.when(n > cfg.bucket_cap, F.pmod(
+        F.xxhash64(F.col(id_col), F.lit("pair-salt")), n_subgroups)
+    ).otherwise(F.lit(0).cast("long"))
     return (
-        nonsingleton_buckets(buckets).groupBy(*BUCKET_KEY)
+        buckets.select(*BUCKET_KEY, id_col,
+                       F.count(F.lit(1)).over(w_bucket).alias("_n"),
+                       F.min(id_col).over(w_bucket).alias("_root"))
+        .filter(n >= 2)
+        .groupBy(*BUCKET_KEY, salt.alias("salt"), "_n", "_root")
         .agg(F.collect_list(id_col).alias("ids"))
-        .withColumn("_n", F.size("ids"))
     )
 
 
@@ -83,52 +96,30 @@ def _explode_pairs(arrays: DataFrame, ids_col: str = "ids") -> DataFrame:
 
 
 def candidate_pairs(arrays: DataFrame, cfg: DedupConfig,
-                    id_col: str = "url") -> DataFrame:
+                    id_col: str = "url",
+                    known: DataFrame | None = None) -> DataFrame:
     """bucket_arrays output (or raw bucket rows, detected by the
-    absence of an `ids` column) -> distinct candidate (a, b), a < b."""
+    absence of an `ids` column) -> distinct candidate (a, b), a < b.
+
+    Pairs already in ``known`` (a, b), a < b, are left out: they join
+    the same dedup shuffle tagged as known, so dropping them costs no
+    join."""
     if "ids" not in arrays.columns:
         arrays = bucket_arrays(arrays, cfg, id_col=id_col)
-    cap = cfg.bucket_cap
-
-    small_pairs = _explode_pairs(arrays.filter(F.col("_n") <= cap))
-
-    # hot buckets: back to rows, deterministic pow-2 salt, re-group per
-    # subgroup (a tiny second shuffle — hot rows are a sliver of the
-    # corpus), row-local pairs within each subgroup
-    n_subgroups = F.pow(
-        F.lit(2.0),
-        F.ceil(F.log2(F.ceil(F.col("_n") / cfg.salt_subgroup)))
-    ).cast("long")
-    big_rows = (
-        arrays.filter(F.col("_n") > cap)
-        .select(*BUCKET_KEY, "_n", F.explode("ids").alias(id_col))
-        .withColumn("salt", F.pmod(F.xxhash64(F.col(id_col), F.lit("pair-salt")),
-                                   n_subgroups))
-    )
-    subgroups = (
-        big_rows.groupBy(*BUCKET_KEY, "salt")
-        .agg(F.collect_list(id_col).alias("ids"))
-    )
-    big_pairs = _explode_pairs(subgroups)
-
-    # star re-connection of subgroups through the bucket-min rep
-    reps = subgroups.select(*BUCKET_KEY, "salt",
-                            F.array_min("ids").alias("rep"))
-    rep_star = (
-        reps.groupBy(*BUCKET_KEY).agg(
-            F.min("rep").alias("root"),
-            F.collect_list("rep").alias("all_reps"))
-        .select(F.col("root").alias("a"),
-                F.explode("all_reps").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-    )
-
-    pa, pb = canonical_pair("a", "b")
+    # a subgroup joins its bucket through the bucket-min id; the row
+    # holding that id (every unsalted bucket's only row) emits nothing
+    star = arrays.select(F.col("_root").alias("a"),
+                         F.array_min("ids").alias("b")) \
+        .filter(F.col("a") < F.col("b"))
+    pairs = _explode_pairs(arrays).unionByName(star)
+    if known is None:
+        return pairs.dropDuplicates(["a", "b"])
     return (
-        small_pairs.unionByName(big_pairs).unionByName(rep_star)
-        .select(pa.alias("a"), pb.alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .dropDuplicates(["a", "b"])
+        pairs.withColumn("_known", F.lit(False))
+        .unionByName(known.select("a", "b", F.lit(True).alias("_known")))
+        .groupBy("a", "b").agg(F.max("_known").alias("_known"))
+        .filter(~F.col("_known"))
+        .select("a", "b")
     )
 
 
@@ -138,15 +129,18 @@ def bucket_stats_from_groups(groups: DataFrame, cfg: DedupConfig,
     src/divGraph.h:1148-1231) from the (materialized, small)
     bucket_arrays output plus the known explode row count — singleton
     counts follow arithmetically: every bucket row not in a
-    multi-member bucket is its own bucket. Logged to the metrics sink
-    every run — capped volume is never silently dropped."""
+    multi-member bucket is its own bucket. A bucket is counted on the
+    one row that holds its min id, so no distinct count (and no
+    shuffle) is needed. Logged to the metrics sink every run — capped
+    volume is never silently dropped."""
+    salted = F.col("_n") > cfg.bucket_cap
+    root_row = (F.array_min("ids") == F.col("_root")).cast("long")
     agg = groups.agg(
-        F.count(F.lit(1)).alias("_multi"),
-        F.sum("_n").alias("_multi_rows"),
+        F.sum(root_row).alias("_multi"),
+        F.sum(F.size("ids")).alias("_multi_rows"),
         F.max("_n").alias("max_bucket"),
-        F.sum((F.col("_n") > cfg.bucket_cap).cast("long"))
-         .alias("salted_buckets"),
-        F.sum(F.when(F.col("_n") > cfg.bucket_cap, F.col("_n")).otherwise(0))
+        F.sum(F.when(salted, root_row).otherwise(0)).alias("salted_buckets"),
+        F.sum(F.when(salted, F.size("ids")).otherwise(0))
          .alias("salted_rows"),
     )
     singletons = F.lit(total_bucket_rows) - F.coalesce(F.col("_multi_rows"),

@@ -2,10 +2,10 @@
 reference's main build+query program, src/main.cpp:11-230, recast as
 the staged dataflow of SURVEY.md §3.4):
 
-  pages ─► rep_map ─► signatures ─► bucket_groups ─► pairs ─► edges ─► clusters
-               └► substring edges (winnowing) ───────────────────────┘
+  pages ─► rep_map ─► signatures ─► bucket_subgroups ─► pairs ─► edges ─► clusters
+               └► substring links (winnowing pairs not in edges) ─────────┘
 
-(the bucket rows between signatures and bucket_groups are a lazy
+(the bucket rows between signatures and bucket_subgroups are a lazy
 explode of the signatures' `bhashes`, never stored)
 
 Exact duplicates collapse first onto one representative url each
@@ -34,7 +34,7 @@ from lsh_apg_spark.operators.pairs import (
     bucket_arrays, bucket_stats_from_groups, candidate_pairs,
 )
 from lsh_apg_spark.operators.signatures import compute_signatures
-from lsh_apg_spark.operators.substring import substring_edges
+from lsh_apg_spark.operators.substring import substring_links
 from lsh_apg_spark.operators.verify import verify_edges
 from lsh_apg_spark.sources.checkpoints import CheckpointStore
 
@@ -144,17 +144,21 @@ def run_dedup(
     # the bucket explode is cheap JVM work over the materialized
     # signatures, so it stays lazy (never stored or checkpointed)
     # rather than materializing ~bands*(1+probes) rows per doc; the
-    # multi-member survivor set IS materialized: it is tiny relative
-    # to the explode, and candidate_pairs fans out over it from several
-    # join branches
-    groups = stage("bucket_groups", lambda: bucket_arrays(
+    # multi-member survivor set IS materialized, one row per bucket or
+    # salted subgroup: it is tiny relative to the explode, and both
+    # candidate_pairs and the bucket stats read it
+    groups = stage("bucket_subgroups", lambda: bucket_arrays(
         explode_buckets(signatures, cfg), cfg))
     pairs = stage("pairs", lambda: candidate_pairs(groups, cfg))
     edges = stage("edges", lambda: verify_edges(pairs, signatures, cfg))
 
     sub = None
     if include_substring:
-        sub = stage("substring_edges", lambda: substring_edges(docs, cfg))
+        # only the CC reads these links, so a pair that is already an
+        # edge is never verified (a stored table that still holds such
+        # pairs builds the same clusters)
+        sub = stage("substring_edges", lambda: substring_links(
+            docs, cfg, known=edges.select("a", "b")))
 
     def build_clusters() -> DataFrame:
         e = edges.select("a", "b")

@@ -57,7 +57,8 @@ def test_pipeline_resume_identical(spark, tmp_path):
                    include_substring=False)
     resumed = {m["stage"]: m.get("resumed") for m in r2.metrics
                if "resumed" in m}
-    for s in ["signatures", "bucket_groups", "pairs", "edges", "clusters"]:
+    for s in ["signatures", "bucket_subgroups", "pairs", "edges",
+              "clusters"]:
         assert resumed[s], f"stage {s} was rebuilt: {resumed}"
     second = sorted((r["url"], r["cluster_id"]) for r in r2.clusters.collect())
     assert first == second

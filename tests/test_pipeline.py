@@ -92,7 +92,7 @@ def test_every_url_assigned_once(fixture_bundle, result):
     # every stage materializes and records its row count and wall time
     stages = [m for m in result.metrics if m["stage"] != "bucket_stats"]
     assert [m["stage"] for m in stages] == [
-        "rep_map", "signatures", "bucket_groups", "pairs", "edges",
+        "rep_map", "signatures", "bucket_subgroups", "pairs", "edges",
         "clusters"]
     for m in stages:
         assert type(m["rows"]) is int, m
@@ -142,11 +142,15 @@ def test_degenerate_corpora(spark):
     assert ids == {"u0"} and r.clusters.count() == 5
 
 
-def test_substring_pass(spark, fixture_bundle):
+def test_substring_pass(spark, fixture_bundle, result):
     """Planted containment pairs (verbatim span inside unrelated
-    boilerplate) are caught by winnowing + exact LCS verify."""
+    boilerplate) are caught by winnowing + exact LCS verify. The
+    cluster-graph variant keeps exactly the pairs the MinHash edges
+    lack."""
     fx, _, _, pages = fixture_bundle
-    from lsh_apg_spark.operators.substring import substring_edges
+    from lsh_apg_spark.operators.substring import (
+        substring_edges, substring_links,
+    )
 
     edges = substring_edges(pages, CFG)
     rows = edges.collect()
@@ -156,6 +160,13 @@ def test_substring_pass(spark, fixture_bundle):
     missed = planted - found
     assert not missed, f"substring pairs missed: {sorted(missed)[:5]}"
     assert all(r["lcs_len"] >= CFG.min_substring_len for r in rows)
+
+    known = result.edges.select("a", "b")
+    minhash = {(r["a"], r["b"]) for r in known.collect()}
+    links = {(r["a"], r["b"])
+             for r in substring_links(pages, CFG, known=known).collect()}
+    assert found & minhash and found - minhash
+    assert links == found - minhash
 
 
 def test_driver_contract_full_oracle_coverage():

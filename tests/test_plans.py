@@ -73,7 +73,7 @@ def test_pair_generation_is_joinless_and_jvm_only(spark):
     docs = spark.createDataFrame(
         [("u1", "a b c d e f"), ("u2", "a b c d e g")], "url string, text string")
     sigs = compute_signatures(docs, CFG)
-    # materialized, as in the pipeline (stage "bucket_groups")
+    # materialized, as in the pipeline (stage "bucket_subgroups")
     arrays = bucket_arrays(explode_buckets(sigs, CFG), CFG) \
         .localCheckpoint(eager=True)
     pairs = candidate_pairs(arrays, CFG)

@@ -38,6 +38,25 @@ def test_lcs_matches_difflib_property(a: str, b: str) -> None:
 
 
 @_FAST
+@given(_texts, _texts, st.integers(min_value=1, max_value=64))
+def test_shares_substring_is_lcs_threshold(a: str, b: str, L: int) -> None:
+    """The one-window test agrees with the LCS length, including texts
+    shorter than L (L ranges past the 60-char max text)."""
+    assert kernels.shares_substring(a, b, L) == (
+        kernels.longest_common_substring_len(a, b) >= L), (a, b, L)
+
+
+@_FAST
+@given(_texts, _texts, st.sampled_from([-1, 0, 1]))
+def test_shares_substring_at_shared_span_boundary(a: str, b: str,
+                                                  d: int) -> None:
+    """L at the longest shared span's length and one either side."""
+    n = kernels.longest_common_substring_len(a, b)
+    L = max(1, n + d)
+    assert kernels.shares_substring(a, b, L) == (n >= L), (a, b, L)
+
+
+@_FAST
 @given(_words, _words, st.integers(min_value=1, max_value=4))
 def test_exact_jaccard_is_true_set_jaccard(a: str, b: str, k: int) -> None:
     """exact_jaccard == |Sa ∩ Sb| / |Sa ∪ Sb| over the shingle-hash
