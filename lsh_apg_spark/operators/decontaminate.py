@@ -27,7 +27,7 @@ reported pair carries the EXACT Jaccard.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from lsh_apg_spark.config import DedupConfig
@@ -51,6 +51,14 @@ MAX_BROADCAST_GRAM_ROWS = 400_000
 
 def _maybe_broadcast(df: DataFrame, n_rows: int, limit: int) -> DataFrame:
     return F.broadcast(df) if n_rows <= limit else df
+
+
+def _checkpoint_counted(df: DataFrame, name: str) -> tuple[DataFrame, int]:
+    """Materialize ``df`` once; its row count rides the same job."""
+    seen = Observation(name)
+    df = df.observe(seen, F.count(F.lit(1)).alias("n")) \
+        .localCheckpoint(eager=True)
+    return df, seen.get["n"]
 
 
 def decontaminate_pairs(
@@ -79,24 +87,20 @@ def decontaminate_pairs(
     cfg = cfg or DedupConfig()
     sig_t = train_signatures if train_signatures is not None \
         else compute_signatures(train, cfg, id_col=id_col, text_col=text_col)
-    sig_e = compute_signatures(eval_docs, cfg, id_col=id_col,
-                               text_col=text_col) \
-        .localCheckpoint(eager=True)
-    n_eval = sig_e.count()
+    sig_e, n_eval = _checkpoint_counted(
+        compute_signatures(eval_docs, cfg, id_col=id_col,
+                           text_col=text_col), "eval_signatures")
 
     b_t = explode_buckets(sig_t, cfg, id_col=id_col) \
         .withColumnRenamed(id_col, "train_id")
     b_e = explode_buckets(sig_e, cfg, id_col=id_col) \
         .withColumnRenamed(id_col, "eval_id")
-    cands = (
+    cands, n_cands = _checkpoint_counted(
         b_t.join(_maybe_broadcast(b_e, n_eval * cfg.bands
                                   * (1 + cfg.num_probes),
                                   MAX_BROADCAST_ROWS), "bhash")
         .select("train_id", "eval_id")
-        .dropDuplicates(["train_id", "eval_id"])
-        .localCheckpoint(eager=True)
-    )
-    n_cands = cands.count()
+        .dropDuplicates(["train_id", "eval_id"]), "candidates")
 
     sh_t = sig_t.select(F.col(id_col).alias("train_id"),
                         F.col("shingles").alias("_st"))
@@ -128,13 +132,12 @@ def decontaminate(
     """The train corpus with contaminated documents REMOVED (left_anti
     against the flagged ids) — the drop-in cleaning step. Schema =
     train's schema, order-preserving per partition."""
-    flagged = decontaminate_pairs(
+    flagged, n_flagged = _checkpoint_counted(decontaminate_pairs(
         train, eval_docs, cfg, id_col=id_col, text_col=text_col,
         train_signatures=train_signatures,
-    ).select(F.col("train_id").alias(id_col)).distinct() \
-        .localCheckpoint(eager=True)
+    ).select(F.col("train_id").alias(id_col)).distinct(), "flagged")
     return train.join(
-        _maybe_broadcast(flagged, flagged.count(), MAX_BROADCAST_ROWS),
+        _maybe_broadcast(flagged, n_flagged, MAX_BROADCAST_ROWS),
         id_col, "left_anti")
 
 
@@ -174,11 +177,11 @@ def decontaminate_exact_ngrams(
             F.explode(F.array_distinct(ngrams_col(text_col, n)))
             .alias("_gram"))
 
-    bank = grams(eval_docs, "eval_id").localCheckpoint(eager=True)
+    bank, n_bank = _checkpoint_counted(grams(eval_docs, "eval_id"),
+                                       "gram_bank")
     return (
         grams(train, "train_id")
-        .join(_maybe_broadcast(bank, bank.count(),
-                               MAX_BROADCAST_GRAM_ROWS),
+        .join(_maybe_broadcast(bank, n_bank, MAX_BROADCAST_GRAM_ROWS),
               "_gram")
         .groupBy("train_id", "eval_id")
         .agg(F.count(F.lit(1)).alias("n_shared"))

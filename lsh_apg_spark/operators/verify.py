@@ -21,8 +21,9 @@ from lsh_apg_spark.config import DedupConfig
 
 def verify_edges(pairs: DataFrame, signatures: DataFrame, cfg: DedupConfig,
                  id_col: str = "url") -> DataFrame:
-    """(a, b) + signatures(id, shingles) -> verified edges
-    (a, b, jaccard) with exact shingle-set Jaccard >= tau.
+    """(a, b, ...) + signatures(id, shingles) -> verified edges
+    (a, b, ..., jaccard) with exact shingle-set Jaccard >= tau; any
+    other column of ``pairs`` rides along between b and jaccard.
 
     The exact Jaccard (never the MinHash estimate) decides every edge,
     mirroring the reference's exact re-rank of every surviving
@@ -32,6 +33,7 @@ def verify_edges(pairs: DataFrame, signatures: DataFrame, cfg: DedupConfig,
     sig_b = signatures.select(F.col(id_col).alias("b"),
                               F.col("shingles").alias("_sb"))
     inter = F.size(F.array_intersect("_sa", "_sb"))
+    extra = [c for c in pairs.columns if c not in ("a", "b")]
     return (
         pairs.join(sig_a, "a").join(sig_b, "b")
         .withColumn("_i", inter)
@@ -39,5 +41,5 @@ def verify_edges(pairs: DataFrame, signatures: DataFrame, cfg: DedupConfig,
             "jaccard",
             F.col("_i") / (F.size("_sa") + F.size("_sb") - F.col("_i")))
         .filter(F.col("jaccard") >= cfg.tau)
-        .select("a", "b", "jaccard")
+        .select("a", "b", *extra, "jaccard")
     )

@@ -56,8 +56,8 @@ class CheckpointStore:
         under a DIFFERENT config/schema version, or from a different
         input than ``input_id`` when that is set). Callers that hold
         accumulated state (the incremental pipeline) must treat
-        "mismatch" as an error, not an empty start: silently taking the
-        cold-start path would overwrite the accumulated corpus with
+        "mismatch" as an error, not an empty start: silently starting
+        from an empty store would overwrite the accumulated corpus with
         just the current batch (ADVICE r2)."""
         side = self._sidecar(name)
         if not (os.path.exists(side)
@@ -150,9 +150,8 @@ class CheckpointStore:
         with open(side) as f:
             return json.load(f)
 
-    def invalidate(self, name: str) -> None:
-        shutil.rmtree(self._path(name), ignore_errors=True)
-        try:
-            os.remove(self._sidecar(name))
-        except FileNotFoundError:
-            pass
+    def clear(self) -> None:
+        """Empty the root: every table, tmp dir and sidecar, including
+        tables an older store layout wrote and nothing reads now."""
+        shutil.rmtree(self.root)
+        os.makedirs(self.root)

@@ -15,21 +15,22 @@ The bucket rows are not stored: they are the explode of the stored
 the stored cluster ids already hold everything a later batch needs
 from them.
 
-Per batch of new pages:
+Every batch, the first one included (a fresh store reads as an empty
+table), runs the same steps:
 
   1. one row per url (pipeline.one_text_per_url), then an anti-join
      against the stored urls (idempotent re-delivery), materialized
      once; its row count rides that same job;
-  2. no new doc left (a full re-delivery): return the stored
-     assignment and write nothing;
+  2. no new doc left (a full re-delivery, or an empty first batch):
+     return the stored assignment and write nothing;
   3. signatures for the NEW docs only, materialized once — the only
      run of the signature UDF in the batch; with ``eval_docs``,
      ``decontaminate()`` drops contaminated new docs here, reusing
      those signatures;
-  4. candidate pairs: on a cold batch over the batch alone, on a warm
-     one the new docs probe the stored bucket keys (exactly like the
-     reference's per-point searchLSH probe) and keep the pairs with a
-     new endpoint;
+  4. candidate pairs over the new bucket rows plus the stored rows of
+     the bucket keys a new doc lands in (the reference's per-point
+     searchLSH probe); left joins to the stored cluster ids keep the
+     pairs with a new endpoint;
   5. verify against the stored plus the new signatures;
   6. one CC over the new docs and the new edges, each endpoint
      contracted to its stored cluster_id (a new doc to itself); the
@@ -55,6 +56,10 @@ from lsh_apg_spark.operators.verify import verify_edges
 from lsh_apg_spark.pipeline import one_text_per_url
 from lsh_apg_spark.sources.checkpoints import CheckpointStore
 
+# the one state table's schema, for the empty state of a fresh store
+DOCS_SCHEMA = ("url string, cluster_id string, shingles array<bigint>, "
+               "bhashes array<bigint>")
+
 
 def dedup_increment(
     spark: SparkSession,
@@ -74,9 +79,9 @@ def dedup_increment(
     ignored.
 
     ``metrics``, if given, receives cc_nodes/cc_edges — the size of the
-    graph the batch actually clustered: on a warm batch the new docs
-    plus the stored cluster ids its new edges touch, and those edges
-    contracted to the ids (not the accumulated corpus) — plus
+    graph the batch actually clustered: the new docs plus the stored
+    cluster ids its new edges touch, and those edges contracted to the
+    ids (not the accumulated corpus) — plus
     contaminated_dropped when ``eval_docs`` is set. All are 0 for a
     batch with no new url, which writes nothing.
 
@@ -89,11 +94,12 @@ def dedup_increment(
 
     A store whose sidecar was written under a DIFFERENT config or
     schema version is an ERROR by default (``on_mismatch="fail"``):
-    the cold-start path would overwrite the accumulated corpus state
-    with just this batch, and raw pages are not retained anywhere to
-    rebuild it — silent truncation, caught loudly instead (ADVICE r2).
-    Pass ``on_mismatch="reset"`` to explicitly discard the old state
-    and restart from this batch."""
+    starting over as a fresh store would overwrite the accumulated
+    corpus state with just this batch, and raw pages are not retained
+    anywhere to rebuild it — silent truncation, caught loudly instead
+    (ADVICE r2). Pass ``on_mismatch="reset"`` to explicitly discard the
+    old state (the whole store is emptied) and restart from this
+    batch."""
     new_docs = one_text_per_url(new_pages)
 
     status = store.status("docs")
@@ -107,12 +113,13 @@ def dedup_increment(
                 "Re-run with the original config, or pass "
                 "on_mismatch='reset' to intentionally restart state from "
                 "this batch.")
-        store.invalidate("docs")
-    warm = status == "ok"
-
-    if warm:
-        stored = store.read("docs")
-        new_docs = new_docs.join(stored.select("url"), "url", "left_anti")
+        store.clear()
+    # a fresh store is an empty one: limit(0) makes the frame an empty
+    # LocalRelation (OptimizeLimitZero), so Catalyst prunes every join
+    # and union against it and a first batch runs no stored-side work
+    stored = store.read("docs") if status == "ok" else \
+        spark.createDataFrame([], DOCS_SCHEMA).limit(0)
+    new_docs = new_docs.join(stored.select("url"), "url", "left_anti")
 
     # every later step reads the batch's new docs and signatures several
     # times (the state write, the CC, the metrics); each is
@@ -122,9 +129,9 @@ def dedup_increment(
     new_docs = new_docs.observe(seen, F.count(F.lit(1)).alias("n")) \
         .localCheckpoint(eager=True)
     n_new = seen.get["n"]
-    if n_new == 0 and warm:
-        # full re-delivery: every url is already in the state, so the
-        # stored assignment is the answer and nothing is rewritten
+    if n_new == 0:
+        # nothing new (a full re-delivery, or an empty first batch):
+        # the stored assignment is the answer and nothing is written
         if metrics is not None:
             metrics.update(cc_nodes=0, cc_edges=0)
             if eval_docs is not None:
@@ -139,66 +146,52 @@ def dedup_increment(
         if metrics is not None:
             metrics["contaminated_dropped"] = n_new - new_docs.count()
 
-    new_ids = new_docs.select("url")
-    if warm:
-        # new docs PROBE the stored bucket keys (the reference's
-        # per-point searchLSH insert probe, src/divGraph.h:359-469):
-        # only bucket keys that a new doc lands in can mint a new pair,
-        # so pair generation runs over that sliver of the bucket table,
-        # and keeps the pairs with a new endpoint
-        sigs = stored.select(*new_sigs.columns).unionByName(new_sigs)
-        touched_keys = explode_buckets(new_sigs, cfg).select("bhash") \
-            .distinct()
-        cands = candidate_pairs(explode_buckets(sigs, cfg).join(
-            touched_keys, ["bhash"], "left_semi"), cfg)
-        pairs = cands.join(new_ids.withColumnRenamed("url", "a"), "a",
-                           "left_semi").unionByName(
-            cands.join(new_ids.withColumnRenamed("url", "b"), "b",
-                       "left_semi")).dropDuplicates(["a", "b"])
-    else:
-        sigs = new_sigs
-        pairs = candidate_pairs(explode_buckets(sigs, cfg), cfg)
-    edges = verify_edges(pairs, sigs, cfg).select("a", "b")
+    # new docs PROBE the stored bucket keys (the reference's per-point
+    # searchLSH insert probe, src/divGraph.h:359-469): only a bucket key
+    # that a new doc lands in can mint a new pair, so pair generation
+    # runs over the new bucket rows plus that sliver of the stored ones
+    new_buckets = explode_buckets(new_sigs, cfg)
+    buckets = new_buckets.unionByName(explode_buckets(stored, cfg).join(
+        new_buckets.select("bhash"), "bhash", "left_semi"))
+    sigs = stored.select(*new_sigs.columns).unionByName(new_sigs)
 
-    if warm:
-        # incremental CC over the contracted graph: edges are only ever
-        # added, so the components after this batch are the stored ones
-        # merged by the new edges. Each endpoint maps to its stored
-        # cluster_id, a new doc to itself; every new edge has a new
-        # endpoint, so no contracted edge is a self-loop. A stored id
-        # is its component's min url and new urls are unseen, so the
-        # CC's min id label still gives cluster_id = min member url.
-        def stored_id(end: str) -> DataFrame:
-            return stored.select(F.col("url").alias(end),
-                                 F.col("cluster_id").alias(f"_{end}"))
+    # incremental CC over the contracted graph: edges are only ever
+    # added, so the components after this batch are the stored ones
+    # merged by the new edges. A pair with two stored endpoints is
+    # already inside the stored components and is left out. Each
+    # endpoint maps to its stored cluster_id, a new doc to itself;
+    # every kept edge has a new endpoint, so no contracted edge is a
+    # self-loop. A stored id is its component's min url and new urls
+    # are unseen, so the CC's min id label still gives cluster_id =
+    # min member url.
+    def stored_id(end: str) -> DataFrame:
+        return stored.select(F.col("url").alias(end),
+                             F.col("cluster_id").alias(f"_{end}"))
 
-        edges = (
-            edges.join(stored_id("a"), "a", "left")
-            .join(stored_id("b"), "b", "left")
-            .select(F.coalesce("_a", "a").alias("a"),
-                    F.coalesce("_b", "b").alias("b"))
-        )
+    pairs = (
+        candidate_pairs(buckets, cfg)
+        .join(stored_id("a"), "a", "left").join(stored_id("b"), "b", "left")
+        .filter(F.col("_a").isNull() | F.col("_b").isNull())
+    )
+    edges = verify_edges(pairs, sigs, cfg).select(
+        F.coalesce("_a", "a").alias("a"), F.coalesce("_b", "b").alias("b"))
     # materialized once, so the batch's pair and verify work runs here
     # and not inside the CC; the edge count rides the same job
     graph = Observation("cc_edges")
     edges = edges.observe(graph, F.count(F.lit(1)).alias("n")) \
         .localCheckpoint(eager=True)
-    # every doc of a cold batch is new, so the new docs are the nodes
-    # either way
-    labels = connected_components(edges, nodes=new_ids)
+    labels = connected_components(edges, nodes=new_docs.select("url"))
     if metrics is not None:
         metrics["cc_nodes"] = labels.count()
         metrics["cc_edges"] = graph.get["n"]
+    # a stored row takes its old id's new label (the CC output is the
+    # small contracted graph, so it broadcasts)
+    remap = labels.select(F.col("url").alias("cluster_id"),
+                          F.col("cluster_id").alias("_to"))
     cols = ["url", "cluster_id", "shingles", "bhashes"]
-    rows = new_sigs.join(labels, "url").select(cols)
-    if warm:
-        # a stored row takes its old id's new label (the CC output is
-        # the small contracted graph, so it broadcasts)
-        remap = labels.select(F.col("url").alias("cluster_id"),
-                              F.col("cluster_id").alias("_to"))
-        rows = stored.join(F.broadcast(remap), "cluster_id", "left") \
-            .withColumn("cluster_id", F.coalesce("_to", "cluster_id")) \
-            .select(cols).unionByName(rows)
+    rows = stored.join(F.broadcast(remap), "cluster_id", "left") \
+        .withColumn("cluster_id", F.coalesce("_to", "cluster_id")) \
+        .select(cols).unionByName(new_sigs.join(labels, "url").select(cols))
 
     # the new table's plan still lazily READS the stored one, so the
     # store writes it to a tmp dir while the old files are on disk and

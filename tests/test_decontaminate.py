@@ -177,3 +177,20 @@ def test_exact_ngram_train_side_never_shuffles(spark):
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
     assert "ShuffledHashJoin" not in plan, plan
+
+
+def test_decontaminate_job_count(spark, count_jobs):
+    """Job-count guard: on the planted corpus ``decontaminate`` runs 8
+    Spark jobs and ``decontaminate_exact_ngrams`` 1, each bounded at
+    one job above. Each broadcast-guard count rides its checkpoint job
+    as an Observation; with a separate count() after each checkpoint
+    (two jobs apiece) they ran 14 and 3."""
+    from lsh_apg_spark.operators.decontaminate import (
+        decontaminate_exact_ngrams,
+    )
+    train, evals = _corpus(spark)
+    _, jobs = count_jobs(lambda: decontaminate(train, evals, DedupConfig()))
+    assert 0 < jobs <= 9, jobs
+    _, jobs = count_jobs(
+        lambda: decontaminate_exact_ngrams(train, evals, n=8, id_col="url"))
+    assert 0 < jobs <= 2, jobs

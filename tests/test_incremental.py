@@ -85,6 +85,27 @@ def test_incremental_redelivery_writes_nothing(spark, corpus, tmp_path):
     assert _state_files(root) == before
 
 
+def test_incremental_empty_first_batch_writes_nothing(spark, corpus,
+                                                     tmp_path):
+    """A fresh store is an empty one: a first batch with no rows
+    returns an empty assignment and writes no table, and the next
+    batch lands on the one-shot assignment."""
+    root = tmp_path / "inc_empty"
+    store = CheckpointStore(spark, str(root), CFG)
+    metrics: dict = {}
+    out = dedup_increment(
+        spark, spark.createDataFrame([], "url string, text string"),
+        store, CFG, metrics=metrics)
+    assert out.columns == ["url", "cluster_id"]
+    assert out.collect() == []
+    assert metrics == {"cc_nodes": 0, "cc_edges": 0}
+    assert store.status("docs") == "missing"
+    assert list(root.iterdir()) == []
+    final = dedup_increment(spark, corpus, store, CFG)
+    batch = run_dedup(spark, corpus, CFG, include_substring=False).clusters
+    assert _assignments(final) == _assignments(batch)
+
+
 def test_incremental_failed_commit_leaves_state(spark, corpus, tmp_path,
                                                 monkeypatch):
     """A warm batch whose commit write fails leaves every state file
@@ -213,15 +234,19 @@ def test_incremental_warm_batch_job_count(spark, corpus, tmp_path,
     Spark jobs is stable, so host noise cannot hide a regression that
     a wall-time check would miss. On the fixture a cold 60-doc batch,
     a warm fresh batch of the other 60 and a full re-delivery run
-    15/21/4 jobs, bounded at +10%. With three state tables (a url
-    ledger, signatures, clusters) they ran 18/28/5; re-clustering the
+    15/18/4 jobs. A cold batch is a warm one over an empty store, so
+    its bound is what catches a stored side that Catalyst cannot prune
+    (an empty frame built as an RDD scan ran 21 cold). With a separate
+    warm dataflow that kept the pairs with a new endpoint by two
+    semi-joins and a union they ran 15/21/4; with three state tables
+    (a url ledger, signatures, clusters) 18/28/5; re-clustering the
     touched components from a stored edge table ran 41 warm."""
     store = CheckpointStore(spark, str(tmp_path / "inc_jobs"), CFG)
     half1 = corpus.limit(60)
     half2 = corpus.subtract(half1)
     jobs = [count_jobs(lambda b=b: dedup_increment(spark, b, store, CFG))[1]
             for b in (half1, half2, corpus)]
-    assert all(0 < j <= bound for j, bound in zip(jobs, (16, 23, 4))), jobs
+    assert all(0 < j <= bound for j, bound in zip(jobs, (16, 20, 4))), jobs
 
 
 @pytest.mark.parametrize("include_substring,bound", [(False, 23), (True, 29)])
@@ -321,8 +346,19 @@ def test_incremental_config_mismatch_fails_loudly(spark, corpus, tmp_path):
     # old state is untouched by the refused batch
     assert store.status("docs") == "ok"
 
-    # explicit reset: allowed, and state restarts from this batch only
+    # explicit reset: allowed, and state restarts from this batch only.
+    # It empties the whole store: the tables an older layout wrote
+    # (signatures, clusters, edges), their sidecars and a leftover tmp
+    # dir all go, and only the new docs table is left
+    root = tmp_path / "inc4"
+    for name in ("signatures", "clusters", "edges", "docs.tmp"):
+        (root / name).mkdir()
+        (root / name / "part-00000.parquet").write_bytes(b"stale")
+    for name in ("signatures", "clusters", "edges"):
+        (root / f"{name}.lineage.json").write_text("{}")
     out = dedup_increment(spark, corpus.limit(80), store2, changed,
                           on_mismatch="reset")
     assert out.count() == 80
     assert store2.status("docs") == "ok"
+    assert sorted(p.name for p in root.iterdir()) == [
+        "docs", "docs.lineage.json"]

@@ -83,6 +83,22 @@ def test_edge_invariants(result):
     assert e.filter((F.col("jaccard") < CFG.tau) | (F.col("jaccard") > 1.0)).count() == 0
 
 
+def test_verify_edges_carries_extra_pair_columns(spark, result):
+    """verify_edges keeps any other pair column between (a, b) and
+    jaccard, in order; run_dedup's (a, b) pairs still give edges of
+    exactly (a, b, jaccard)."""
+    from lsh_apg_spark.operators.verify import verify_edges
+    sigs = spark.createDataFrame(
+        [("x", [1, 2, 3]), ("y", [1, 2, 3]), ("z", [7, 8, 9])],
+        "url string, shingles array<bigint>")
+    pairs = spark.createDataFrame([("x", "y", "t1"), ("x", "z", "t2")],
+                                  "a string, b string, tag string")
+    edges = verify_edges(pairs, sigs, CFG)
+    assert edges.columns == ["a", "b", "tag", "jaccard"]
+    assert [tuple(r) for r in edges.collect()] == [("x", "y", "t1", 1.0)]
+    assert result.edges.columns == ["a", "b", "jaccard"]
+
+
 def test_every_url_assigned_once(fixture_bundle, result):
     _, _, _, pages = fixture_bundle
     n_docs = pages.count()
